@@ -11,6 +11,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.types._
 
@@ -59,7 +60,7 @@ final case class ReplaceWhereStats(
     removedFiles: Long, maskedRows: Long, writtenRows: Long,
     deletedRows: Option[Long])
 
-object DeltaWriter {
+object DeltaWriter extends Logging {
 
   /** Pin parquet timestamp encoding to INT64 micros for `body`, then
     * restore the session conf — Delta's physical timestamp encoding;
@@ -157,7 +158,6 @@ object DeltaWriter {
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
 
-    val before = listDataFiles(fs, root)
     val prior = priorSnapshot.orElse {
       if (fs.exists(new Path(root, "_delta_log"))) Some(DeltaLog.forPath(spark, path))
       else None
@@ -341,7 +341,7 @@ object DeltaWriter {
     // identity metadata: declaration stamped at create; the advanced
     // high-water mark stamped on EVERY assigning write. The resulting
     // schemaString change flows through schemaEvolved → metaData
-    // emission AND canRetry=false, which is load-bearing: two racing
+    // emission AND canRebase=false, which is load-bearing: two racing
     // identity appends must conflict, not rebase into duplicate values.
     val mergedSchema: StructType =
       if (idSpecs.isEmpty) mergedSchemaPreId
@@ -399,7 +399,7 @@ object DeltaWriter {
     // in-commit timestamps: the ENABLING commit records its provenance
     // (spec: enablementVersion = this commit, enablementTimestamp =
     // this commit's own ICT — pinned via ictFixed so they agree).
-    // cfgChanged disables append OCC retry, so `version` is final here.
+    // cfgChanged disables the append rebase, so `version` is final here.
     val newlyIct = ictEnabled(propCfg0) && !ictEnabled(priorCfg)
     val ictFixed: Option[Long] =
       if (!newlyIct) None
@@ -595,20 +595,19 @@ object DeltaWriter {
           partCols.map(org.apache.spark.sql.functions.col): _*)
         else dfF.hint("rebalance")
       } else dfF
-    try withMicrosTimestamps(spark) {
+    val newFiles = try withMicrosTimestamps(spark) {
       withAdvisorySize(spark,
         if (optimizeWrite) targetFileSize(newCfg) else None) {
-        toPhysical(df1, tableSchema).write.mode("append")
-          .partitionBy(physicalPartitionBy(partCols, tableSchema): _*)
-          .parquet(path)
+        writeFiles(fs, root) { dir =>
+          toPhysical(df1, tableSchema).write.mode("append")
+            .partitionBy(physicalPartitionBy(partCols, tableSchema): _*)
+            .parquet(dir)
+        }
       }
     } finally {
       if (enforced) dfV.unpersist()
       idCache.foreach(_.unpersist())
     }
-
-    val after = listDataFiles(fs, root)
-    val newFiles = (after -- before).toSeq.sorted
 
     val nf = JsonNodeFactory.instance
     val lines = mutable.ArrayBuffer.empty[String]
@@ -770,86 +769,35 @@ object DeltaWriter {
 
     txn.foreach { case (appId, v) => lines += txnLine(appId, v) }
 
-    lines += commitInfoLine(
-      if (mode == "overwrite") "WRITE" else "APPEND",
+    val opName = if (mode == "overwrite") "WRITE" else "APPEND"
+    lines += commitInfoLine(opName,
       params = Map("mode" -> mode) ++
         (if (partCols.nonEmpty)
           Map("partitionBy" -> partCols.mkString(",")) else Map.empty),
       metrics = Map("numFiles" -> newFiles.size.toLong))
 
-    val logDir = new Path(root, "_delta_log")
-    fs.mkdirs(logDir)
-    // Optimistic concurrency. Only a PLAIN data append may retry at the
-    // next version when its target was taken: a v0 commit carries this
-    // writer's protocol/metaData (would clobber the winner's schema), a
-    // txn action embeds an exactly-once watermark check that the race
-    // invalidates, and overwrites/evolutions were computed against state
-    // that just changed — all of those must surface the conflict. Even a
-    // plain append aborts if the winning commit changed table metadata
-    // (its files were written under the old schema).
-    // row tracking: fresh baseRowIds above the domain's high-water
-    // mark + the advanced domain line. A row-tracked append must NOT
-    // blind-rebase (canRetry below): the winner may have advanced the
-    // same high-water mark, and rebasing would mint duplicate row ids.
-    if (rtEnabled) {
-      val withIds = assignRowIds(lines.toSeq,
-        prior.map(rowIdHwm).getOrElse(-1L))
-      lines.clear(); lines ++= withIds
-    }
-    val canRetry =
+    // Optimistic concurrency. Only a PLAIN data append may rebase past
+    // a winner (validated: a winner that changed table metadata aborts
+    // it — its files were written under the old schema): a v0 commit
+    // carries this writer's protocol/metaData (would clobber the
+    // winner's schema), a txn action embeds an exactly-once watermark
+    // check that the race invalidates, overwrites/evolutions were
+    // computed against state that just changed, and a row-tracked
+    // append's winner may have advanced the same high-water mark
+    // (rebasing would mint duplicate row ids) — all of those commit at
+    // their exact version. `ictFixed` is only set on a cfgChanged
+    // write, so the enablement version it records is final.
+    val canRebase =
       mode == "append" && !schemaEvolved && !cfgChanged &&
         txn.isEmpty && version > 0L && !rtEnabled
-    // per-attempt serialization: ICT (when enabled) must re-read its
-    // predecessor after an OCC version bump, and
-    // defaultRowCommitVersion must equal the version actually taken.
-    // The last attempt's stamped lines are kept so the crc sees the
-    // SAME actions the commit file carries (incl. inCommitTimestamp).
-    var stampedLines: Seq[String] = lines.toSeq
-    def bytesFor(vv: Long): Array[Byte] = {
-      stampedLines = withRowVersion(
-        withIct(spark, path, vv, lines.toSeq, newCfg, ictFixed), vv, newCfg)
-      (stampedLines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8)
+    try commit(spark, path, prior, lines.toSeq,
+      if (canRebase) Rebase(Set.empty) else ExactVersion, opName, newCfg,
+      ictFixed)
+    catch {
+      // write() reports every lost race as an IOException
+      case e: java.util.ConcurrentModificationException =>
+        throw new java.io.IOException(e.getMessage, e)
     }
-    var v = version
-    var committed = false
-    while (!committed) {
-      val commit = new Path(logDir, f"$v%020d.json")
-      if (fs.exists(commit)) {
-        if (!canRetry) throw new java.io.IOException(
-          s"Concurrent write took version $v of $path; " +
-            "re-run against the new table state")
-        val winner = DeltaLog.readCommitJson(spark, path, v).getOrElse(Nil)
-        if (winner.exists(n => n.has("metaData") || n.has("protocol")))
-          throw new java.io.IOException(
-            s"Concurrent commit $v of $path changed table metadata; " +
-              "re-run the append against the new schema")
-        v += 1
-      } else {
-        // full bytes land in a temp file first: a write failure can
-        // never strand a truncated commit JSON in the log. NOTE: on file
-        // systems without atomic no-overwrite rename (raw local, S3A)
-        // the exists-then-rename window is a best-effort lock — same
-        // caveat as every Hadoop-FS-based Delta committer without a
-        // LogStore coordination layer.
-        val tmp = new Path(logDir,
-          s".${commit.getName}.${java.util.UUID.randomUUID()}.tmp")
-        val out = fs.create(tmp, false)
-        try out.write(bytesFor(v))
-        finally out.close()
-        if (fs.exists(commit)) { // lost the race while staging
-          fs.delete(tmp, false)
-        } else if (fs.rename(tmp, commit)) {
-          committed = true
-        } else {
-          fs.delete(tmp, false)
-          throw new java.io.IOException(s"Could not commit $commit")
-        }
-      }
-    }
-    // crc only when no OCC rebase moved the version — winners' files
-    // are not in `prior`, so incremental accounting would be wrong
-    if (v == version) writeCrc(spark, path, v, prior, stampedLines)
-    maybeCheckpoint(spark, path, v, newCfg)
     // live-file sizes derivable from what this call already holds (the
     // prior snapshot's adds on append, plus the files just written) —
     // so the below-threshold common case never replays the log
@@ -982,7 +930,7 @@ object DeltaWriter {
     } else lines += clusteringDomainLine(cols.map(logToPhys))
     lines += commitInfoLine("CLUSTER BY",
       params = Map("clusterBy" -> cols.mkString(",")))
-    commitDml(spark, path, snap, lines.toSeq, readSet = Set.empty,
+    commit(spark, path, Some(snap), lines.toSeq, Rebase(Set.empty),
       "CLUSTER BY", snap.configuration)
   }
 
@@ -1018,7 +966,7 @@ object DeltaWriter {
         compact(spark, path, target, reclusterIfClustered = false)
     } catch {
       case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft] auto-compact of $path failed: $e")
+        logWarning(s"auto-compact of $path failed", e)
     }
   }
 
@@ -1099,8 +1047,7 @@ object DeltaWriter {
     finally out.close()
   } catch {
     case scala.util.control.NonFatal(e) =>
-      System.err.println(
-        s"[graft] version checksum for $deltaPath v$version failed: $e")
+      logWarning(s"version checksum for $deltaPath v$version failed", e)
   }
 
   /** Auto-checkpoint: after committing `version`, write a classic
@@ -1129,8 +1076,7 @@ object DeltaWriter {
           cleanupLogs(spark, path, Some(logRetentionMs(config)))
       } catch {
         case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[graft] auto-checkpoint of $path at v$version failed: $e")
+          logWarning(s"auto-checkpoint of $path at v$version failed", e)
       }
   }
 
@@ -1219,9 +1165,8 @@ object DeltaWriter {
     config.get("delta.logRetentionDuration") match {
       case None => Default
       case Some(s) => parseIntervalMs(s).getOrElse {
-        System.err.println(
-          s"[graft] unparseable delta.logRetentionDuration '$s'; " +
-            "using 30 days")
+        logWarning(s"unparseable delta.logRetentionDuration '$s'; " +
+          "using 30 days")
         Default
       }
     }
@@ -1518,7 +1463,7 @@ object DeltaWriter {
       params = Map("predicate" -> conditions.mkString(" AND ")),
       metrics = Map("numDeletedRows" -> newlyDeleted,
         "numRemovedFiles" -> removed.size.toLong))
-    commitDml(spark, path, snap, all, removed, "DELETE",
+    commit(spark, path, Some(snap), all, Rebase(removed), "DELETE",
       snap.configuration)
     newlyDeleted
   }
@@ -1682,7 +1627,7 @@ object DeltaWriter {
         params = Map("predicate" -> predicate),
         metrics = Map("numDeletedRows" -> newlyDeleted,
           "numRemovedFiles" -> removed.size.toLong))
-      commitDml(spark, path, snap, all, removed, "DELETE",
+      commit(spark, path, Some(snap), all, Rebase(removed), "DELETE",
         snap.configuration)
       newlyDeleted
     } finally { src.unpersist(); () }
@@ -1795,10 +1740,10 @@ object DeltaWriter {
         // applied even when N carried no rows (appendBatch's empty
         // commits behave the same way)
         txn.foreach { case (appId, v) =>
-          commitDml(spark, path, snap,
+          commit(spark, path, Some(snap),
             Seq(txnLine(appId, v),
               commitInfoLine("MERGE", metrics = Map("numSourceRows" -> 0L))),
-            Set.empty, "MERGE", snap.configuration)
+            Rebase(Set.empty), "MERGE", snap.configuration)
         }
         MergeStats(0L, 0L)
       }
@@ -1892,14 +1837,15 @@ object DeltaWriter {
           if (deleteWhen.isEmpty) srcRows else upserts.count()
         val root = new Path(path)
         val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-        val before = listDataFiles(fs, root)
-        if (written > 0L) withMicrosTimestamps(spark) {
-          toPhysical(upserts, schema).write.mode("append")
-            .partitionBy(
-              physicalPartitionBy(snap.partitionColumns, schema): _*)
-            .parquet(path)
+        val newFiles = if (written == 0L) Nil else withMicrosTimestamps(spark) {
+          writeFiles(fs, root) { dir =>
+            toPhysical(upserts, schema).write.mode("append")
+              .partitionBy(
+                physicalPartitionBy(snap.partitionColumns, schema): _*)
+              .parquet(dir)
+          }
         }
-        (listDataFiles(fs, root) -- before).toSeq.sorted.foreach { rel =>
+        newFiles.foreach { rel =>
           lines += addActionLine(fs, root, rel, statsIndexedSchema(
             DeltaSchema.physicalize(schema), snap.configuration))
         }
@@ -1914,9 +1860,9 @@ object DeltaWriter {
             "numTargetRowsDeleted" -> deleted,
             "numSourceRowsWritten" -> written,
             "numTargetFilesRemoved" -> removed.size.toLong))
-        commitDml(spark, path, snap, lines.toSeq,
-          removed, "MERGE", snap.configuration,
-          newDataGuard = Some(bounds))
+        commit(spark, path, Some(snap), lines.toSeq,
+          Rebase(removed, newDataGuard = Some(bounds)), "MERGE",
+          snap.configuration)
         MergeStats(updated, written, deleted)
       }
     } finally src.unpersist()
@@ -2011,13 +1957,14 @@ object DeltaWriter {
       catch { case t: Throwable => if (enforced) imagesV.unpersist(); throw t }
       val root = new Path(path)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      val before = listDataFiles(fs, root)
-      try {
-        withMicrosTimestamps(spark) {
-          toPhysical(imagesV, schema).write.mode("append")
-            .partitionBy(
-              physicalPartitionBy(snap.partitionColumns, schema): _*)
-            .parquet(path)
+      val newFiles = try {
+        val files = withMicrosTimestamps(spark) {
+          writeFiles(fs, root) { dir =>
+            toPhysical(imagesV, schema).write.mode("append")
+              .partitionBy(
+                physicalPartitionBy(snap.partitionColumns, schema): _*)
+              .parquet(dir)
+          }
         }
         // stored CDF: pre/post images of exactly the updated rows
         if (cdfEnabled(snap.configuration)) {
@@ -2029,8 +1976,9 @@ object DeltaWriter {
               .withColumn("_change_type", lit("update_postimage")))
           lines ++= writeCdcFiles(spark, path, snap, cdc)
         }
+        files
       } finally if (enforced) imagesV.unpersist()
-      (listDataFiles(fs, root) -- before).toSeq.sorted.foreach { rel =>
+      newFiles.foreach { rel =>
         lines += addActionLine(fs, root, rel, statsIndexedSchema(
           DeltaSchema.physicalize(schema), snap.configuration))
       }
@@ -2038,8 +1986,8 @@ object DeltaWriter {
       lines += commitInfoLine("UPDATE",
         params = Map("predicate" -> conditions.mkString(" AND ")),
         metrics = Map("numUpdatedRows" -> updated))
-      commitDml(spark, path, snap, lines.toSeq,
-        removedPaths(lines.toSeq), "UPDATE", snap.configuration)
+      commit(spark, path, Some(snap), lines.toSeq,
+        Rebase(removedPaths(lines.toSeq)), "UPDATE", snap.configuration)
       updated
     } finally matched.unpersist()
   }
@@ -2150,14 +2098,15 @@ object DeltaWriter {
 
       val root = new Path(path)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      val before = listDataFiles(fs, root)
-      if (written > 0L) withMicrosTimestamps(spark) {
-        toPhysical(src, schema).write.mode("append")
-          .partitionBy(
-            physicalPartitionBy(snap.partitionColumns, schema): _*)
-          .parquet(path)
+      val newFiles = if (written == 0L) Nil else withMicrosTimestamps(spark) {
+        writeFiles(fs, root) { dir =>
+          toPhysical(src, schema).write.mode("append")
+            .partitionBy(
+              physicalPartitionBy(snap.partitionColumns, schema): _*)
+            .parquet(dir)
+        }
       }
-      (listDataFiles(fs, root) -- before).toSeq.sorted.foreach { rel =>
+      newFiles.foreach { rel =>
         lines += addActionLine(fs, root, rel, statsIndexedSchema(
           DeltaSchema.physicalize(schema), snap.configuration))
       }
@@ -2174,8 +2123,9 @@ object DeltaWriter {
           "numRemovedFiles" -> removed.size.toLong,
           "numDeletionVectorRows" -> masked) ++
           deletedRows.map("numDeletedRows" -> _))
-      commitDml(spark, path, snap, lines.toSeq, removed, "REPLACE WHERE",
-        snap.configuration, newDataGuard = Some(conditions))
+      commit(spark, path, Some(snap), lines.toSeq,
+        Rebase(removed, newDataGuard = Some(conditions)), "REPLACE WHERE",
+        snap.configuration)
       ReplaceWhereStats(whole.size.toLong, masked, written, deletedRows)
     } finally src.unpersist()
   }
@@ -2232,8 +2182,8 @@ object DeltaWriter {
     lines += commitInfoLine("FSCK",
       params = Map("dryRun" -> "false"),
       metrics = Map("numRemovedFiles" -> missing.size.toLong))
-    commitDml(spark, path, snap, lines.toSeq, missing.toSet, "FSCK",
-      snap.configuration)
+    commit(spark, path, Some(snap), lines.toSeq, Rebase(missing.toSet),
+      "FSCK", snap.configuration)
     missing
   }
 
@@ -2316,8 +2266,8 @@ object DeltaWriter {
       params = Map("version" -> toVersion.toString),
       metrics = Map("numRestoredFiles" -> toAdd.size.toLong,
         "numRemovedFiles" -> toRemove.size.toLong))
-    writeCommitAt(spark, path, cur.version + 1, lines.toSeq,
-      tgt.configuration, prior = Some(cur))
+    commit(spark, path, Some(cur), lines.toSeq, ExactVersion, "RESTORE",
+      tgt.configuration)
     RestoreStats(toAdd.size.toLong, toRemove.size.toLong,
       dvChanged.size.toLong)
   }
@@ -2431,8 +2381,8 @@ object DeltaWriter {
       metadataLine(path, snap.metadata.get, cfg),
       commitInfoLine("ADD CONSTRAINT",
         params = Map("name" -> name, "expr" -> sqlExpr)))
-    commitDml(spark, path, snap, lines, Set.empty, "ADD CONSTRAINT", cfg,
-      newDataGuard = Some(Nil))
+    commit(spark, path, Some(snap), lines,
+      Rebase(Set.empty, newDataGuard = Some(Nil)), "ADD CONSTRAINT", cfg)
   }
 
   /** ALTER TABLE DROP CONSTRAINT: remove CHECK constraint `name`. One
@@ -2455,7 +2405,8 @@ object DeltaWriter {
     val lines = Seq(
       metadataLine(path, snap.metadata.get, cfg),
       commitInfoLine("DROP CONSTRAINT", params = Map("name" -> name)))
-    commitDml(spark, path, snap, lines, Set.empty, "DROP CONSTRAINT", cfg)
+    commit(spark, path, Some(snap), lines, Rebase(Set.empty),
+      "DROP CONSTRAINT", cfg)
   }
 
   /** Shallow CLONE: create `dstPath` as a new Delta table whose v0
@@ -2575,8 +2526,8 @@ object DeltaWriter {
     }
     lines += commitInfoLine("CLONE",
       params = Map("source" -> srcPath))
-    dstFs.mkdirs(new Path(dstRoot, "_delta_log"))
-    writeCommitAt(spark, dstPath, 0L, lines.toSeq, md.configuration)
+    commit(spark, dstPath, None, lines.toSeq, ExactVersion, "CLONE",
+      md.configuration)
   }
 
   /** Per-file deletion-vector actions for the matched
@@ -2801,19 +2752,16 @@ object DeltaWriter {
     if (rows.isEmpty) return Nil
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val before = listCdcFiles(fs, root)
-    withMicrosTimestamps(spark) {
-      toPhysical(rows, snap.schema).write.mode("append")
-        .partitionBy(
-          physicalPartitionBy(snap.partitionColumns, snap.schema): _*)
-        .parquet(new Path(root, "_change_data").toString)
+    val cdcFiles = withMicrosTimestamps(spark) {
+      writeFiles(fs, root, into = "_change_data/") { dir =>
+        toPhysical(rows, snap.schema).write.mode("append")
+          .partitionBy(
+            physicalPartitionBy(snap.partitionColumns, snap.schema): _*)
+          .parquet(dir)
+      }
     }
-    val lines = mutable.ArrayBuffer.empty[String]
-    writerFeatureProtocolLine(snap.protocol, "changeDataFeed", Some(4))
-      .foreach(lines += _)
-    (listCdcFiles(fs, root) -- before).toSeq.sorted
-      .foreach(rel => lines += cdcLineFor(fs, root, rel))
-    lines.toSeq
+    writerFeatureProtocolLine(snap.protocol, "changeDataFeed", Some(4)).toSeq ++
+      cdcFiles.map(rel => cdcLineFor(fs, root, rel))
   }
 
   /** Subtract rows a prior deletion vector already masked from a
@@ -2915,7 +2863,7 @@ object DeltaWriter {
     * backfill the write()-path guard points at. ONE commit that (a)
     * upgrades the protocol with the `rowTracking` + `domainMetadata`
     * writer features, (b) sets `delta.enableRowTracking=true`, and (c)
-    * re-states every live file `dataChange=false`; commitDml's row-id
+    * re-states every live file `dataChange=false`; commit's row-id
     * assignment then mints each restated add a fresh disjoint
     * `baseRowId` and writes the advanced high-water-mark domain under
     * OCC. Fail-closed against racers (`newDataGuard=Some(Nil)`): a
@@ -2943,9 +2891,9 @@ object DeltaWriter {
     }
     lines += commitInfoLine("ENABLE ROW TRACKING",
       metrics = Map("numBackfilledFiles" -> snap.liveFiles.size.toLong))
-    commitDml(spark, path, snap, lines.toSeq,
-      readSet = snap.liveFiles.map(_.path).toSet, "ENABLE ROW TRACKING",
-      cfg, newDataGuard = Some(Nil))
+    commit(spark, path, Some(snap), lines.toSeq,
+      Rebase(snap.liveFiles.map(_.path).toSet, newDataGuard = Some(Nil)),
+      "ENABLE ROW TRACKING", cfg)
   }
 
   /** Whether `p` already grants the columnMapping reader-writer feature
@@ -3007,8 +2955,8 @@ object DeltaWriter {
       snap.metadata.get.copy(schemaString = mapped.json), cfg)
     lines += commitInfoLine("SET COLUMN MAPPING",
       params = Map("mode" -> "name"))
-    commitDml(spark, path, snap, lines.toSeq, readSet = Set.empty,
-      "SET COLUMN MAPPING", cfg, newDataGuard = Some(Nil))
+    commit(spark, path, Some(snap), lines.toSeq,
+      Rebase(Set.empty, newDataGuard = Some(Nil)), "SET COLUMN MAPPING", cfg)
   }
 
   /** Guard shared by the rename/drop DDL: the column must not be
@@ -3077,8 +3025,8 @@ object DeltaWriter {
     lines += metadataLine(path, md, cfg)
     lines += commitInfoLine("RENAME COLUMN",
       params = Map("oldName" -> oldName, "newName" -> newName))
-    commitDml(spark, path, snap, lines.toSeq, readSet = Set.empty,
-      "RENAME COLUMN", cfg, newDataGuard = Some(Nil))
+    commit(spark, path, Some(snap), lines.toSeq,
+      Rebase(Set.empty, newDataGuard = Some(Nil)), "RENAME COLUMN", cfg)
   }
 
   /** DROP COLUMN as a metadata-only commit: the field leaves the
@@ -3119,8 +3067,8 @@ object DeltaWriter {
     lines += metadataLine(path,
       snap.metadata.get.copy(schemaString = remaining.json), cfg)
     lines += commitInfoLine("DROP COLUMN", params = Map("column" -> colName))
-    commitDml(spark, path, snap, lines.toSeq, readSet = Set.empty,
-      "DROP COLUMN", cfg, newDataGuard = Some(Nil))
+    commit(spark, path, Some(snap), lines.toSeq,
+      Rebase(Set.empty, newDataGuard = Some(Nil)), "DROP COLUMN", cfg)
   }
 
   /** Fresh column-mapping identity for a NEW field and every nested
@@ -3217,8 +3165,8 @@ object DeltaWriter {
       snap.metadata.get.copy(schemaString = widened.json), cfg)
     lines += commitInfoLine("ADD COLUMN",
       params = Map("column" -> colName, "type" -> dataType.simpleString))
-    commitDml(spark, path, snap, lines.toSeq, readSet = Set.empty,
-      "ADD COLUMN", cfg, newDataGuard = Some(Nil))
+    commit(spark, path, Some(snap), lines.toSeq,
+      Rebase(Set.empty, newDataGuard = Some(Nil)), "ADD COLUMN", cfg)
   }
 
   /** Allowed type-widening transitions (the protocol's typeWidening
@@ -3310,8 +3258,9 @@ object DeltaWriter {
       params = Map("column" -> colName,
         "fromType" -> f.dataType.simpleString,
         "toType" -> to.simpleString))
-    commitDml(spark, path, snap, lines.toSeq, readSet = Set.empty,
-      "ALTER COLUMN", snap.configuration, newDataGuard = Some(Nil))
+    commit(spark, path, Some(snap), lines.toSeq,
+      Rebase(Set.empty, newDataGuard = Some(Nil)), "ALTER COLUMN",
+      snap.configuration)
   }
 
   /** A column default must be a constant expression: no column
@@ -3390,8 +3339,9 @@ object DeltaWriter {
       snap.configuration)
     lines += commitInfoLine("ALTER COLUMN",
       params = Map("column" -> colName, "default" -> sqlExpr))
-    commitDml(spark, path, snap, lines.toSeq, readSet = Set.empty,
-      "ALTER COLUMN", snap.configuration, newDataGuard = Some(Nil))
+    commit(spark, path, Some(snap), lines.toSeq,
+      Rebase(Set.empty, newDataGuard = Some(Nil)), "ALTER COLUMN",
+      snap.configuration)
   }
 
   /** ALTER TABLE ALTER COLUMN … DROP DEFAULT: remove the column's
@@ -3420,8 +3370,9 @@ object DeltaWriter {
         snap.configuration),
       commitInfoLine("ALTER COLUMN",
         params = Map("column" -> colName, "dropDefault" -> "true")))
-    commitDml(spark, path, snap, lines, readSet = Set.empty,
-      "ALTER COLUMN", snap.configuration, newDataGuard = Some(Nil))
+    commit(spark, path, Some(snap), lines,
+      Rebase(Set.empty, newDataGuard = Some(Nil)), "ALTER COLUMN",
+      snap.configuration)
   }
 
   /** ALTER TABLE SET TBLPROPERTIES: merge `props` into
@@ -3454,7 +3405,7 @@ object DeltaWriter {
     })
     // The ICT-enabling commit is pinned to an exact version (its
     // enablementVersion / enablementTimestamp must name the version and
-    // ICT actually taken), so it cannot rebase inside commitDml like the
+    // ICT actually taken), so it cannot rebase inside commit like the
     // plain path — instead the WHOLE attempt (snapshot → merge → commit)
     // retries when a concurrent writer takes the version first, exactly
     // the rebase-or-conflict outcome every other ALTER verb gets.
@@ -3517,23 +3468,12 @@ object DeltaWriter {
       lines += commitInfoLine("SET TBLPROPERTIES", params = props)
       if (newlyIct) {
         // exact-version commit (no rebase): enablementVersion and the
-        // crc's view of the configuration must name the version taken
-        try {
-          writeCommitAt(spark, path, version, lines.toSeq, cfg,
-            prior = Some(snap), ictFixed = ictFixed)
-          return version
-        } catch {
-          case e: java.io.IOException =>
-            // a RACE means the target version now exists on disk; any
-            // other IOException is a genuine storage failure and must
-            // surface as itself, not as a concurrency conflict
-            val raced = {
-              val fs = new Path(path)
-                .getFileSystem(spark.sessionState.newHadoopConf())
-              fs.exists(new Path(new Path(path, "_delta_log"),
-                f"$version%020d.json"))
-            }
-            if (!raced) throw e
+        // crc's view of the configuration must name the version taken.
+        // Only a lost race retries; a storage failure surfaces as itself
+        try return commit(spark, path, Some(snap), lines.toSeq,
+          ExactVersion, "SET TBLPROPERTIES", cfg, ictFixed)
+        catch {
+          case e: java.nio.file.FileAlreadyExistsException =>
             if (attempt >= 5)
               throw new java.util.ConcurrentModificationException(
                 s"SET TBLPROPERTIES on $path lost the commit race " +
@@ -3543,9 +3483,10 @@ object DeltaWriter {
         }
       } else
         // plain properties rebase past disjoint appends like every other
-        // ALTER verb — tmp-file staging + conflict validation included
-        return commitDml(spark, path, snap, lines.toSeq, readSet = Set.empty,
-          "SET TBLPROPERTIES", cfg, newDataGuard = Some(Nil))
+        // ALTER verb
+        return commit(spark, path, Some(snap), lines.toSeq,
+          Rebase(Set.empty, newDataGuard = Some(Nil)), "SET TBLPROPERTIES",
+          cfg)
     }
     -1L // unreachable
   }
@@ -3583,8 +3524,8 @@ object DeltaWriter {
     lines += metadataLine(path, snap.metadata.get, cfg)
     lines += commitInfoLine("UNSET TBLPROPERTIES",
       params = Map("keys" -> keys.mkString(",")))
-    commitDml(spark, path, snap, lines.toSeq, readSet = Set.empty,
-      "UNSET TBLPROPERTIES", cfg, newDataGuard = Some(Nil))
+    commit(spark, path, Some(snap), lines.toSeq,
+      Rebase(Set.empty, newDataGuard = Some(Nil)), "UNSET TBLPROPERTIES", cfg)
   }
 
   /** Stamp `defaultRowCommitVersion` = the commit's actual version on
@@ -3665,29 +3606,6 @@ object DeltaWriter {
     t.toString
   }
 
-  /** Write commit `version` exactly — no retry; a concurrent writer
-    * taking the version surfaces as an error (RESTORE re-states the
-    * whole live file set and must not silently rebase).
-    */
-  private def writeCommitAt(spark: org.apache.spark.sql.SparkSession,
-      path: String, version: Long, lines: Seq[String],
-      config: Map[String, String] = Map.empty,
-      prior: Option[DeltaSnapshot] = None,
-      /** Pins the commit's ICT — the ICT-ENABLING commit must stamp the
-        * same instant it recorded as `enablementTimestamp`. */
-      ictFixed: Option[Long] = None): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val commit = new Path(new Path(root, "_delta_log"), f"$version%020d.json")
-    val lines2 = withIct(spark, path, version, lines, config, ictFixed)
-    val out = fs.create(commit, false)
-    try out.write(
-      (lines2.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    writeCrc(spark, path, version, prior, lines2)
-    maybeCheckpoint(spark, path, version, config)
-  }
-
   /** The file paths a DML/maintenance commit REMOVES (or re-states with
     * a new DV — the protocol pairs that with a remove of the same path):
     * exactly the files whose content the transaction's outcome depends
@@ -3702,12 +3620,22 @@ object DeltaWriter {
         .flatMap(r => Option(r.get("path")).map(_.asText))
     }.toSet
 
-  /** Commit a DML/maintenance transaction computed against `snap`, with
-    * READ-SET conflict validation instead of a blind abort: when a
-    * concurrent writer took the target version, each winning commit is
-    * examined, and the transaction rebases one version up ONLY when the
-    * winner is a disjoint plain data append — anything else aborts
-    * loudly:
+  /** How [[commit]] treats a version another writer already holds. */
+  private sealed trait RacePolicy
+
+  /** The actions are valid only at the version after the base — a v0
+    * create, RESTORE's re-stated file set, an ICT enablement recording
+    * its own version, a write whose metadata or txn watermark was
+    * computed against the base: a lost race throws
+    * [[java.nio.file.FileAlreadyExistsException]] (an IOException).
+    */
+  private case object ExactVersion extends RacePolicy
+
+  /** Read-set conflict validation instead of a blind abort: each
+    * winning commit is examined ([[validateRebase]]) and the
+    * transaction rebases one version up ONLY when the winner is a
+    * disjoint plain data append — anything else aborts loudly with a
+    * [[java.util.ConcurrentModificationException]]:
     *
     *  - `metaData`/`protocol` change: our data files and compiled
     *    predicates were built under the old schema/features;
@@ -3721,78 +3649,115 @@ object DeltaWriter {
     * blind appends): a rebased outcome equals this transaction having
     * run BEFORE the concurrent append — the append's files are never
     * dropped, masked, or re-stated, so no concurrent write is lost.
+    *
+    * `newDataGuard`: when set, winner commits' genuinely NEW data files
+    * (dataChange adds not paired with a remove of the same path —
+    * restates are old rows) are additionally zone-map-tested against
+    * these conditions; possible overlap aborts. MERGE passes its source
+    * key bounds: without this, two concurrent merges inserting the same
+    * previously-absent key would each see an "insert" and rebase into a
+    * duplicate-key table no serial order produces. `Some(Nil)` = no
+    * provable bounds ⇒ any new data file conflicts (fail-closed).
+    */
+  private final case class Rebase(readSet: Set[String],
+      newDataGuard: Option[Seq[Cond]] = None) extends RacePolicy
+
+  /** The commit pipeline — the only code that creates a
+    * `_delta_log/<v>.json`. Claims the version after `base` (0 when
+    * `base` is None):
+    *
+    *  1. row tracking gives new adds fresh baseRowIds above `base`'s
+    *     high-water mark, plus the advanced domain;
+    *  2. each attempt stamps the actions for the version it tries (ICT
+    *     re-reads its predecessor, `defaultRowCommitVersion` names the
+    *     version taken), stages the full bytes in a temp file — a
+    *     failure never strands a truncated commit JSON — and publishes
+    *     it with [[putIfAbsent]];
+    *  3. a version already held goes to `onRace`: rebase past a
+    *     validated winner, or throw;
+    *  4. the `.crc` only when no rebase moved the version (winners'
+    *     files are not in `base`, so incremental accounting would be
+    *     wrong), then the auto-checkpoint.
+    *
     * Returns the committed version.
     */
-  private def commitDml(spark: org.apache.spark.sql.SparkSession,
-      path: String, snap: DeltaSnapshot, lines: Seq[String],
-      readSet: Set[String], op: String,
-      config: Map[String, String],
-      /** When set, winner commits' genuinely NEW data files (dataChange
-        * adds not paired with a remove of the same path — restates are
-        * old rows) are additionally zone-map-tested against these
-        * conditions; possible overlap aborts. MERGE passes its source
-        * key bounds: without this, two concurrent merges inserting the
-        * same previously-absent key would each see an "insert" and
-        * rebase into a duplicate-key table no serial order produces.
-        * `Some(Nil)` = no provable bounds ⇒ any new data file
-        * conflicts (fail-closed).
-        */
-      newDataGuard: Option[Seq[Cond]] = None): Long = {
+  private def commit(spark: org.apache.spark.sql.SparkSession,
+      path: String, base: Option[DeltaSnapshot], lines: Seq[String],
+      onRace: RacePolicy, op: String, config: Map[String, String],
+      /** Pins the commit's ICT — the ICT-ENABLING commit must stamp the
+        * same instant it recorded as `enablementTimestamp`. */
+      ictFixed: Option[Long] = None): Long = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(root, "_delta_log")
-    // row tracking: DML image appends get fresh baseRowIds + the
-    // advanced high-water-mark domain (restated DV adds keep theirs)
+    if (base.isEmpty) fs.mkdirs(logDir)
     val lines2 =
       if (!rowTrackingEnabled(config)) lines
-      else assignRowIds(lines, rowIdHwm(snap))
-    val parsedLines = lines2.map(ActionCodec.mapper.readTree)
-    val ourTxnApps: Set[String] = parsedLines.flatMap(n =>
+      else assignRowIds(lines, base.map(rowIdHwm).getOrElse(-1L))
+    lazy val parsedLines = lines2.map(ActionCodec.mapper.readTree)
+    lazy val ourTxnApps: Set[String] = parsedLines.flatMap(n =>
       Option(n.get("txn")).filterNot(_.isNull)
         .flatMap(t => Option(t.get("appId")).map(_.asText))).toSet
-    val ourDomains: Set[String] = parsedLines.flatMap(n =>
+    lazy val ourDomains: Set[String] = parsedLines.flatMap(n =>
       Option(n.get("domainMetadata")).filterNot(_.isNull)
         .flatMap(d => Option(d.get("domain")).map(_.asText))).toSet
-    // per-attempt serialization: ICT (when enabled) must re-read its
-    // predecessor after a rebase moved the version, and
-    // defaultRowCommitVersion must equal the version actually taken.
-    // Stamped lines are kept so the crc mirrors the committed actions.
-    var stampedLines: Seq[String] = lines2
-    def bytesFor(vv: Long): Array[Byte] = {
-      stampedLines =
-        withRowVersion(withIct(spark, path, vv, lines2, config), vv, config)
-      (stampedLines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8)
-    }
-    var v = snap.version + 1
+    val first = base.map(_.version + 1).getOrElse(0L)
+    var v = first
     while (true) {
-      val commit = new Path(logDir, f"$v%020d.json")
-      if (fs.exists(commit)) {
-        validateRebase(spark, path, v, readSet, ourTxnApps, ourDomains,
-          op, newDataGuard, snap)
-        v += 1
-      } else {
-        // full bytes land in a temp file first (same discipline as
-        // write()): a failure can never strand truncated commit JSON
+      val target = new Path(logDir, f"$v%020d.json")
+      if (!fs.exists(target)) {
+        val stamped = withRowVersion(
+          withIct(spark, path, v, lines2, config, ictFixed), v, config)
         val tmp = new Path(logDir,
-          s".${commit.getName}.${java.util.UUID.randomUUID()}.tmp")
+          s".${target.getName}.${java.util.UUID.randomUUID()}.tmp")
         val out = fs.create(tmp, false)
-        try out.write(bytesFor(v))
+        try out.write(
+          (stamped.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
         finally out.close()
-        if (fs.exists(commit)) {
-          fs.delete(tmp, false) // lost the race while staging; revalidate
-        } else if (fs.rename(tmp, commit)) {
-          if (v == snap.version + 1)
-            writeCrc(spark, path, v, Some(snap), stampedLines)
+        if (putIfAbsent(fs, tmp, target)) {
+          if (v == first) writeCrc(spark, path, v, base, stamped)
           maybeCheckpoint(spark, path, v, config)
           return v
-        } else {
-          fs.delete(tmp, false)
-          throw new java.io.IOException(s"Could not commit $commit")
         }
+      }
+      onRace match {
+        case ExactVersion =>
+          throw new java.nio.file.FileAlreadyExistsException(
+            target.toString, null, s"a concurrent writer took version $v " +
+              s"of $path; this $op commits only at that exact version — " +
+              "re-run it against the new table state")
+        case Rebase(readSet, newDataGuard) =>
+          validateRebase(spark, path, v, readSet, ourTxnApps, ourDomains,
+            op, newDataGuard, base)
+          v += 1
       }
     }
     sys.error("unreachable")
   }
+
+  /** Publish the staged `tmp` as `target` unless `target` exists —
+    * atomically; false = another writer holds the version. The staged
+    * file is gone afterwards. On the local file system a hard link
+    * claims the name: the OS refuses to link onto an existing file,
+    * where Hadoop's local `rename` either refuses with a bare `false`
+    * or (raw FS) silently replaces the winner's commit. Other schemes
+    * use `rename`, which refuses to overwrite on HDFS but is only
+    * best-effort on S3A (no atomic put-if-absent; the same caveat as
+    * every Hadoop-FS Delta committer without a coordinating LogStore).
+    */
+  private def putIfAbsent(fs: FileSystem, tmp: Path, target: Path): Boolean =
+    if (fs.getUri.getScheme == "file") {
+      def local(p: Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+      try { java.nio.file.Files.createLink(local(target), local(tmp)); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally fs.delete(tmp, false)
+    } else fs.rename(tmp, target) || {
+      fs.delete(tmp, false)
+      // a refused rename with no winner in place is a storage failure
+      if (!fs.exists(target))
+        throw new java.io.IOException(s"Could not commit $target")
+      false
+    }
 
   /** Examine ONE winning commit for rebase eligibility — throws a
     * [[java.util.ConcurrentModificationException]] with the conflict and
@@ -3802,7 +3767,7 @@ object DeltaWriter {
   private def validateRebase(spark: org.apache.spark.sql.SparkSession,
       path: String, v: Long, readSet: Set[String],
       ourTxnApps: Set[String], ourDomains: Set[String], op: String,
-      newDataGuard: Option[Seq[Cond]], snap: DeltaSnapshot): Unit = {
+      newDataGuard: Option[Seq[Cond]], base: Option[DeltaSnapshot]): Unit = {
     val nodes = DeltaLog.readCommitJson(spark, path, v).getOrElse(
       throw new java.io.IOException(
         s"Concurrent commit $v of $path exists but could not be read; " +
@@ -3836,7 +3801,7 @@ object DeltaWriter {
         .foreach(d => conflict(s"advanced domain '$d' this $op also writes"))
     }
     newDataGuard.foreach { conds =>
-      val sch = snap.schema
+      val sch = base.map(_.schema).getOrElse(new StructType())
       val physToField = DeltaSchema.physicalToField(sch)
       val logToPhys = DeltaSchema.logicalToPhysical(sch)
       // restates carry no new rows: an add paired with a remove of the
@@ -3930,13 +3895,7 @@ object DeltaWriter {
       lines += addObj.toString
     }
     lines += commitInfoLine("CONVERT")
-
-    val logDir = new Path(root, "_delta_log")
-    fs.mkdirs(logDir)
-    val out = fs.create(new Path(logDir, f"${0L}%020d.json"), false)
-    try out.write((lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    writeCrc(spark, path, 0L, None, lines.toSeq)
+    commit(spark, path, None, lines.toSeq, ExactVersion, "CONVERT", Map.empty)
   }
 
   /** Compaction (OPTIMIZE): bin-pack small files per partition into
@@ -4249,8 +4208,8 @@ object DeltaWriter {
         (if (purgeOnly) Map("applyPurge" -> "true")
          else Map.empty[String, String]),
       metrics = Map("numCompactedFiles" -> nCompacted.toLong))
-    commitDml(spark, path, snap, lines.toSeq,
-      removedPaths(lines.toSeq), opName, snap.configuration)
+    commit(spark, path, Some(snap), lines.toSeq,
+      Rebase(removedPaths(lines.toSeq)), opName, snap.configuration)
     nCompacted
   }
 
@@ -4918,10 +4877,9 @@ object DeltaWriter {
   private[delta] def encodePath(rel: String): String =
     new java.net.URI(null, null, rel, null).getRawPath
 
-  /** Relative paths of all parquet data files under the table root.
+  /** Relative paths of all parquet data files under `root`.
     * `_change_data/` is excluded — stored CDF files are never table
-    * state, and a DML that just staged them must not fold them into its
-    * add-action diff.
+    * state.
     */
   private def listDataFiles(fs: FileSystem, root: Path): Set[String] = {
     if (!fs.exists(root)) return Set.empty
@@ -4938,19 +4896,31 @@ object DeltaWriter {
     out.toSet
   }
 
-  /** Relative (to the table root) paths of stored change-data files. */
-  private def listCdcFiles(fs: FileSystem, root: Path): Set[String] = {
-    val dir = new Path(root, "_change_data")
-    if (!fs.exists(dir)) return Set.empty
-    val out = mutable.Set.empty[String]
-    val it = fs.listFiles(dir, true)
-    val rootUri = root.toUri.getPath.stripSuffix("/")
-    while (it.hasNext) {
-      val f = it.next()
-      val p = f.getPath.toUri.getPath
-      if (p.endsWith(".parquet")) out += p.stripPrefix(rootUri + "/")
-    }
-    out.toSet
+  /** Run `write` — one Spark parquet write into the directory it is
+    * handed — then move the files it produced to the same relative
+    * paths under `root/<into>` and return those root-relative paths,
+    * sorted. Spark writes into a private `.write_tmp_<uuid>` directory
+    * (compaction's staging shape), so writers racing on one table never
+    * share Spark's `<dir>/_temporary` job directory, which a finishing
+    * job deletes under a running one, and each knows exactly its own
+    * files instead of diffing table listings that also show the other
+    * writer's.
+    */
+  private def writeFiles(fs: FileSystem, root: Path, into: String = "")(
+      write: String => Unit): Seq[String] = {
+    // qualified: a relative root must still list as root-relative paths
+    val tmpDir = fs.makeQualified(
+      new Path(root, s".write_tmp_${java.util.UUID.randomUUID()}"))
+    try {
+      write(tmpDir.toString)
+      listDataFiles(fs, tmpDir).toSeq.sorted.map { rel =>
+        val dest = new Path(root, into + rel)
+        fs.mkdirs(dest.getParent)
+        if (!fs.rename(new Path(tmpDir, rel), dest))
+          throw new java.io.IOException(s"could not move written file to $dest")
+        into + rel
+      }
+    } finally fs.delete(tmpDir, true)
   }
 
   /** `key=value` hive path segments → partitionValues (URL-decoded;

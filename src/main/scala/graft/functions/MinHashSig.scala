@@ -162,12 +162,14 @@ object MinHashSig {
 
   /** Whether this JVM's MD5 MessageDigest supports clone() — probed
     * once; the clone-prefix fast path below falls back to the plain
-    * loop when it does not (r16 ADVICE).
+    * loop when it does not (r16 ADVICE). Any non-fatal probe failure
+    * means "no": an escaping throwable would fail this object's
+    * initializer and poison MinHashSig for the whole JVM.
     */
   private val md5Cloneable: Boolean =
     try {
       java.security.MessageDigest.getInstance("MD5").clone(); true
-    } catch { case _: CloneNotSupportedException => false }
+    } catch { case scala.util.control.NonFatal(_) => false }
 
   private def kernelMd5(arr: ArrayData, num: Int): ArrayData = {
     val sfx = suffixes(num)

@@ -812,8 +812,10 @@ object DedupOps {
       // hash-probe pass per candidate pair instead of two interpreted
       // set builds materializing intersection AND union arrays; with
       // both sides array_distinct'ed, |union| = |a| + |b| - overlap,
-      // so the union array never needs to exist. Catalyst's
-      // subexpression elimination evaluates the kernel once per row.
+      // so the union array never needs to exist. Subexpression
+      // elimination shares the kernel only within one projection: the
+      // `jaccard >= 0.1` filter pushed below the projection re-evaluates
+      // it, so a row may run the kernel 2-3 times.
       val inter = graft.functions.OverlapCount.overlapCount(
         s, col("sh_a"), col("sh_b"))
       cand

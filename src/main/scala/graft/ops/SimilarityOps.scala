@@ -352,10 +352,10 @@ object SimilarityOps {
     // checkpoint — ~550 B/row for a decision that only needs the two
     // ids. Ship (query_id, vec_id) (16 B/row) through the dedup, and
     // re-attach qv afterwards from the batch-sized signed relation
-    // (tbl = 0 selects exactly one row per query — lshTables fans every
-    // query out over all tables) via a broadcast join. qv is a pure
-    // function of query_id (the probe batches key queries uniquely), so
-    // the scored rows are identical.
+    // (tbl = 0 selects one row per query row — lshTables fans every
+    // query out over all tables) via a broadcast join. A caller's batch
+    // may repeat a query_id, so qv is deduplicated on it: one row per
+    // key keeps the join from fanning each candidate out per copy.
     val cand = index
       .join(broadcast(qsig.select("tbl", "sig", "query_id")),
         Seq("tbl", "sig"))
@@ -368,6 +368,7 @@ object SimilarityOps {
       ProbePushdown.collectCapped(cand.select("vec_id"), 8 * cap)
         .map(_.map(_.getLong(0)).toSeq))
     val qv = qsig.where(col("tbl") === 0).select(col("query_id"), col("qv"))
+      .dropDuplicates("query_id")
     val scored = cand.join(vecs, "vec_id")
       .join(broadcast(qv), "query_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),

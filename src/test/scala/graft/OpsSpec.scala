@@ -99,6 +99,34 @@ class OpsSpec extends SparkSuite {
     assert(rows.forall(_.getInt(1) <= 5))
   }
 
+  test("ann probe-from-store: a repeated query_id yields each neighbor once") {
+    val idx = java.nio.file.Files.createTempDirectory("graft_annrep")
+      .toString + "/idx"
+    def vecs(ids: Seq[Long]) = ids.toDF("vec_id").withColumn("embedding",
+      expr("transform(sequence(0, 63), " +
+        "j -> cast(sin((vec_id % 5) * 1.3 + j * 0.1) + " +
+        "0.01 * vec_id AS float))"))
+    SimilarityOps.buildOrRefreshAnnIndex(spark, idx, vecs(0L until 40L))
+    val once = vecs(0L until 3L)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val k = 4
+    def probe(q: org.apache.spark.sql.DataFrame) =
+      SimilarityOps.annProbeFromStore(spark, idx, q, k)
+        .select("query_id", "rank", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+    // every query row sent three times in one batch
+    val out = probe(once.union(once).union(once))
+    assert(out.nonEmpty, "probe returned nothing — vectors never collide")
+    assert(out.map(r => (r._1, r._3)).distinct.size == out.size,
+      "a (query, neighbor) pair came back more than once")
+    out.groupBy(_._1).foreach { case (q, rows) =>
+      assert(rows.map(_._2).sorted == (1 to rows.size),
+        s"query $q ranks ${rows.map(_._2).sorted} are not 1..n")
+      assert(rows.size <= k)
+    }
+    assert(out.toSet == probe(once).toSet)
+  }
+
   test("ivf quantizer K scales with the corpus: bounded cluster size") {
     // K ≈ ceil(n / TargetCluster), clamped [16, 2^22] — so the
     // expected cluster size n/K stays ≤ TargetCluster (=32) everywhere

@@ -14,7 +14,8 @@ import graft.{DeltaLake, SparkSuite}
   * The interleaving is driven through the writers' `priorSnapshot`
   * hooks: take a snapshot, let a "concurrent" writer commit, then run
   * the DML against the stale snapshot — exactly the plan-to-commit race
-  * window of two independent processes.
+  * window of two independent processes. The race specs below run real
+  * threads released together, so the version claim itself is contended.
   */
 class ConcurrencySpec extends SparkSuite {
 
@@ -193,6 +194,120 @@ class ConcurrencySpec extends SparkSuite {
         priorSnapshot = Some(snap0))
     }
     assert(e.getMessage.contains("metadata"), e.getMessage)
+  }
+
+  /** Run `body(1..n)` on n threads released together by a barrier;
+    * each writer's result or the exception it threw, in writer order.
+    */
+  private def race[A](n: Int)(body: Int => A): Seq[Either[Throwable, A]] = {
+    val barrier = new java.util.concurrent.CyclicBarrier(n)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try (1 to n).map { w =>
+      pool.submit(new java.util.concurrent.Callable[A] {
+        def call(): A = { barrier.await(); body(w) }
+      })
+    }.map(f => scala.util.Try(f.get()).toEither.left.map {
+      case e: java.util.concurrent.ExecutionException => e.getCause
+      case e => e
+    })
+    finally pool.shutdown()
+  }
+
+  test("N appenders racing from one base snapshot each claim one version") {
+    // real threads released together by a barrier, all committing
+    // against the same stale snapshot: every version 1..N must be
+    // claimed by exactly one appender (the staged put-if-absent never
+    // overwrites a winner nor fails with "Could not commit"), and every
+    // acknowledged append's rows must read back exactly once. Long and
+    // string columns only: each write flips the shared session's parquet
+    // timestamp conf around its data write, so racing writers see each
+    // other's value (and can leave it set — restored below).
+    val n = 4
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val tsConf = spark.conf.getOption(tsKey)
+    try for (round <- 1 to 5) {
+      val path = tmp()
+      DeltaWriter.write(Seq((0L, "base")).toDF("id", "writer"), path)
+      val snap0 = DeltaLog.forPath(spark, path)
+      val batches = (1 to n).map(w =>
+        (1 to 3).map(i => (w * 100L + i, s"w$w")).toDF("id", "writer"))
+      val outcomes = race(n) { w =>
+        DeltaWriter.write(batches(w - 1), path, mode = "append",
+          priorSnapshot = Some(snap0))
+      }
+      val failures = outcomes.collect { case Left(e) => e }
+      assert(failures.isEmpty,
+        s"round $round: disjoint appends must all rebase and land: " +
+          failures.map(_.toString).mkString("; "))
+
+      val logDir = new java.io.File(path, "_delta_log")
+      val versions = logDir.list().toSeq
+        .filter(_.matches("\\d{20}\\.json")).map(_.take(20).toLong).sorted
+      assert(versions == (0L to n.toLong), s"round $round: $versions")
+      // a loser that replaced a winner's commit would drop its rows
+      val rows = DeltaLake.scanDelta(spark, path)
+        .select("id", "writer").as[(Long, String)].collect().toSeq
+      val expected = (0L, "base") +: (1 to n).flatMap(w =>
+        (1 to 3).map(i => (w * 100L + i, s"w$w")))
+      assert(rows.sorted == expected.sorted, s"round $round")
+    } finally tsConf match {
+      case Some(v) => spark.conf.set(tsKey, v)
+      case None => spark.conf.unset(tsKey)
+    }
+  }
+
+  test("N DV deletes racing on disjoint files all rebase; none lost") {
+    val n = 4
+    for (round <- 1 to 5) {
+      val path = tmp()
+      target(path) // one file per bucket
+      // protocol seed: the racers' commits then carry file actions only
+      DeltaWriter.delete(spark, path, Seq(Cond("id", "=", 100L)))
+      val snap1 = DeltaLog.forPath(spark, path)
+      // writer w deletes id w: buckets 1, 2, 3, 0 — file-disjoint
+      val outcomes = race(n) { w =>
+        DeltaWriter.delete(spark, path, Seq(Cond("id", "=", w.toLong)),
+          priorSnapshot = Some(snap1))
+      }
+      assert(outcomes.forall(_ == Right(1L)), s"round $round: $outcomes")
+      assert(DeltaLog.forPath(spark, path).version == 1L + n)
+      val ids = DeltaLake.scanDelta(spark, path).select("id")
+        .as[Long].collect().toSet
+      assert(ids == (5L to 99L).toSet, s"round $round")
+    }
+  }
+
+  test("N ALTERs racing for one version: one claim each, losers conflict") {
+    // metadata-only commits run no Spark job, so barrier-released
+    // writers reach the claim within microseconds of each other: every
+    // version is taken exactly once, and a loser either rebases onto a
+    // fresh snapshot or fails with the conflict — never "Could not
+    // commit", never by replacing the winner
+    val n = 8
+    for (round <- 1 to 5) {
+      val path = tmp()
+      DeltaWriter.write(Seq((0L, "base")).toDF("id", "writer"), path)
+      val outcomes = race(n) { w =>
+        DeltaWriter.setTableProperties(spark, path,
+          Map(s"graft.race.w$w" -> "1"))
+      }
+      val unexpected = outcomes.collect {
+        case Left(e) if !e.isInstanceOf[
+          java.util.ConcurrentModificationException] => e
+      }
+      assert(unexpected.isEmpty, s"round $round: " +
+        unexpected.map(_.toString).mkString("; "))
+      val won = outcomes.collect { case Right(v) => v }
+      assert(won.nonEmpty && won.distinct.size == won.size,
+        s"round $round: two writers acknowledged one version: $won")
+      val snap = DeltaLog.forPath(spark, path)
+      assert(won.sorted == (1L to snap.version), s"round $round: $won")
+      // every acknowledged writer's property survived: no commit
+      // replaced another
+      val winners = (1 to n).filter(w => outcomes(w - 1).isRight)
+      assert(winners.forall(w =>
+        snap.configuration.contains(s"graft.race.w$w")), s"round $round")
+    }
   }
 
   test("DV commit size guard fails loudly with the cure, then clears") {
