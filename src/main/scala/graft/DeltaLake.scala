@@ -410,8 +410,8 @@ object DeltaLake {
     * DV but not in the `sinceVersion` DV are re-read and returned.
     * Bitmap diffs are computed driver-side (compact bytes; files whose
     * descriptor is unchanged are skipped without any read); row
-    * extraction is one distributed scan + broadcast semi-join on
-    * (file, row index). Files dropped entirely by overwrites are NOT
+    * extraction is one distributed scan filtered by the inverted
+    * `DvMask` of the wanted (file, row index) sets. Files dropped entirely by overwrites are NOT
     * included (their rows may be gone from disk); DV deletes — the
     * engine's own delete path — are fully covered.
     */

@@ -97,43 +97,18 @@ object DeletionVectors {
 
   /** Serialize 64-bit row indices (any order, duplicates collapse) to
     * the portable DV data (magic + bitmap array) plus the resulting
-    * cardinality. Buckets 0..maxKey are all present, empties included,
-    * as the portable format requires.
+    * cardinality.
     */
   def serializeData(rowIndexes: Iterator[Long]): (Array[Byte], Long) = {
-    val buckets = scala.collection.mutable.TreeMap.empty[Int, RoaringBitmap]
-    rowIndexes.foreach { v =>
-      require(v >= 0, s"negative row index $v")
-      buckets.getOrElseUpdate((v >>> 32).toInt, new RoaringBitmap)
-        .add((v & 0xFFFFFFFFL).toInt)
-    }
-    val n = buckets.keysIterator.maxOption.map(_ + 1).getOrElse(0)
-    val all = (0 until n).map(i => buckets.getOrElse(i, new RoaringBitmap))
-    all.foreach(_.runOptimize())
-    val size = 4 + 8 + all.map(_.serializedSizeInBytes()).sum
-    val bb = ByteBuffer.allocate(size).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(Magic)
-    bb.putLong(n.toLong)
-    all.foreach(_.serialize(bb))
-    (bb.array(), all.map(_.getLongCardinality).sum)
+    val bits = new RowIndexBitmap
+    rowIndexes.foreach(bits.add)
+    (bits.serialize(), bits.cardinality)
   }
 
   /** All 64-bit row indices in the DV data, ascending. */
   def deserializeData(data: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
-    val magic = bb.getInt
-    require(magic == Magic, s"bad DV magic $magic")
-    val n = bb.getLong
     val out = Array.newBuilder[Long]
-    (0L until n).foreach { key =>
-      val rb = new RoaringBitmap
-      rb.deserialize(bb)
-      // deserialize(ByteBuffer) does not advance the buffer position
-      bb.position(bb.position() + rb.serializedSizeInBytes())
-      rb.forEach(new org.roaringbitmap.IntConsumer {
-        def accept(v: Int): Unit = out += (key << 32) | (v & 0xFFFFFFFFL)
-      })
-    }
+    RowIndexBitmap.deserialize(data).foreach(out += _)
     out.result()
   }
 
@@ -239,5 +214,76 @@ object DeletionVectors {
       } finally in.close()
     case other =>
       throw new DeltaProtocolError(s"Unknown DV storage type '$other'")
+  }
+}
+
+/** A set of 64-bit physical row indices in the DV data layout: one 32-bit
+  * roaring bitmap per high word, index = high word. The deserialized
+  * form every DV consumer probes or merges — the scan's [[DvMask]] and
+  * the DML bitmap pass — without expanding it into indices.
+  */
+final class RowIndexBitmap private (private var buckets: Array[RoaringBitmap]) {
+
+  def this() = this(Array.empty[RoaringBitmap])
+
+  private def bucket(hi: Int): RoaringBitmap = {
+    if (hi >= buckets.length)
+      buckets = Array.tabulate(hi + 1)(i =>
+        if (i < buckets.length) buckets(i) else new RoaringBitmap)
+    buckets(hi)
+  }
+
+  def add(v: Long): Unit = {
+    require(v >= 0, s"negative row index $v")
+    bucket((v >>> 32).toInt).add(v.toInt)
+  }
+
+  def contains(v: Long): Boolean = {
+    val hi = (v >>> 32).toInt
+    hi >= 0 && hi < buckets.length && buckets(hi).contains(v.toInt)
+  }
+
+  /** In-place union. */
+  def or(other: RowIndexBitmap): Unit =
+    other.buckets.indices.foreach(i => bucket(i).or(other.buckets(i)))
+
+  def cardinality: Long = buckets.map(_.getLongCardinality).sum
+
+  def foreach(f: Long => Unit): Unit =
+    buckets.indices.foreach { hi =>
+      val key = hi.toLong << 32
+      buckets(hi).forEach(new org.roaringbitmap.IntConsumer {
+        def accept(v: Int): Unit = f(key | (v & 0xFFFFFFFFL))
+      })
+    }
+
+  /** The portable DV data: magic, bucket count, then buckets 0..max,
+    * empties included, as the format requires.
+    */
+  def serialize(): Array[Byte] = {
+    buckets.foreach(_.runOptimize())
+    val size = 4 + 8 + buckets.map(_.serializedSizeInBytes()).sum
+    val bb = ByteBuffer.allocate(size).order(ByteOrder.LITTLE_ENDIAN)
+    bb.putInt(DeletionVectors.Magic)
+    bb.putLong(buckets.length.toLong)
+    buckets.foreach(_.serialize(bb))
+    bb.array()
+  }
+}
+
+object RowIndexBitmap {
+
+  def deserialize(data: Array[Byte]): RowIndexBitmap = {
+    val bb = ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
+    val magic = bb.getInt
+    require(magic == DeletionVectors.Magic, s"bad DV magic $magic")
+    val n = bb.getLong
+    new RowIndexBitmap(Array.fill(n.toInt) {
+      val rb = new RoaringBitmap
+      rb.deserialize(bb)
+      // deserialize(ByteBuffer) does not advance the buffer position
+      bb.position(bb.position() + rb.serializedSizeInBytes())
+      rb
+    })
   }
 }

@@ -29,14 +29,20 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * whole point of a table format at scale.
   *
   * Deletion-vector tables use this index too: the file source serves
-  * `_metadata.row_index`, so DeltaScan layers the row-index/file-key
-  * columns over the single scan node and anti-joins the deleted pairs.
+  * `_metadata.file_path` and `_metadata.row_index`, and a [[DvMask]]
+  * filter over the same single scan node drops the deleted rows. Every
+  * file is handed to Spark under the qualified path
+  * [[DeltaFileIndex.filePath]] builds, so `_metadata.file_path` equals
+  * [[DeltaFileIndex.fileKey]] for its add action: per-file maps (DV
+  * bitmaps, row-tracking bases, the DML pass's partial bitmaps) are
+  * keyed by that string, with no per-row normalization.
   */
 final class DeltaFileIndex(
     snap: DeltaSnapshot,
     actions: Seq[AddAction]) extends FileIndex {
 
   private val base = snap.deltaPath.stripSuffix("/")
+  private val pathOf = DeltaFileIndex.filePath(snap)
   private val schema = snap.schema
   private val logToPhys = DeltaSchema.logicalToPhysical(schema)
   private val physToField = DeltaSchema.physicalToField(schema)
@@ -71,7 +77,7 @@ final class DeltaFileIndex(
 
   private def status(a: AddAction): FileStatus =
     new FileStatus(a.size, false, 1, 128L * 1024 * 1024, a.modificationTime,
-      new Path(DeltaScan.resolvePath(base, a.path)))
+      pathOf(a))
 
   /** Translate a pushed Catalyst predicate back into the [[Cond]] DSL
     * (on LOGICAL column names) for zone-map skipping. Unsupported shapes
@@ -153,4 +159,29 @@ final class DeltaFileIndex(
   override def refresh(): Unit = ()
 
   override def sizeInBytes: Long = actions.map(_.size).sum
+}
+
+object DeltaFileIndex {
+
+  /** Where each of `snap`'s add actions is read from: the resolved path,
+    * qualified against the table's filesystem (one lookup per call, not
+    * per file). `spark.read.parquet` qualifies its paths the same way,
+    * so both scan shapes report the same `_metadata.file_path`.
+    */
+  private def filePath(snap: DeltaSnapshot): AddAction => Path = {
+    val base = snap.deltaPath.stripSuffix("/")
+    val fs = new Path(base).getFileSystem(snap.spark.sessionState.newHadoopConf())
+    a => new Path(DeltaScan.resolvePath(base, a.path))
+      .makeQualified(fs.getUri, fs.getWorkingDirectory)
+  }
+
+  /** Each add action's `_metadata.file_path` exactly as a scan of it
+    * reports it: the file source renders the path through its string
+    * form (`new Path(path.toString).toUri.toString`), which drops an
+    * empty authority (`file:///t` reads back `file:/t`).
+    */
+  private[delta] def fileKey(snap: DeltaSnapshot): AddAction => String = {
+    val path = filePath(snap)
+    a => new Path(path(a).toString).toUri.toString
+  }
 }

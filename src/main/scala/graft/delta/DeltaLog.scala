@@ -68,8 +68,8 @@ final class DeltaSnapshot(
   /** Protocol gate — refuse tables whose reader features we cannot honor.
     * Spec: protocol_check.py:7-44. Unlike the reference (which rejects
     * deletion vectors outright, README.md:39-46), deletionVectors are a
-    * SUPPORTED feature here: the scan applies them (DeltaScan's DV
-    * anti-join) and the writer produces them (DeltaWriter.delete).
+    * SUPPORTED feature here: the scan applies them (DeltaScan's
+    * [[DvMask]] filter) and the writer produces them (DeltaWriter.delete).
     * v2Checkpoint is supported too: forPath discovers UUID-named
     * checkpoint files in its listing and resolves sidecar actions.
     */

@@ -1,7 +1,7 @@
 package graft.delta
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Scan options — the union of the reference's `PolarsSettings` +
@@ -30,8 +30,8 @@ final case class ScanSettings(
     /** Scan-shape dispatch. Any value > 0 (the default) takes the
       * Catalyst-native DeltaFileIndex path — ONE FileSourceScanExec with
       * planner-side partition pruning, O(1) plan regardless of partition
-      * count, deletion vectors subtracted via `_metadata.row_index` over
-      * the same single scan. 0 forces the legacy shape (escape hatch /
+      * count, deletion vectors masked by a [[DvMask]] filter over the
+      * same single scan. 0 forces the legacy shape (escape hatch /
       * its specs): one multi-path scan joined (broadcast) with a
       * file→partition-values map.
       */
@@ -56,7 +56,8 @@ final case class ScanSettings(
   * The default plan shape is a single `FileSourceScanExec` through
   * [[DeltaFileIndex]] regardless of file or partition count (SURVEY §7
   * risk register: union width) — partition values typed by the index,
-  * deletion vectors subtracted by row index over the same scan node.
+  * deletion vectors masked per file by a [[DvMask]] filter over the same
+  * scan node.
   * Pruning (partition values + stats zone maps + limit) happens
   * driver-side AND planner-side (the index re-prunes cached frames).
   */
@@ -104,17 +105,9 @@ object DeltaScan {
     val base = snap.deltaPath.stripSuffix("/")
 
     val logToPhys = DeltaSchema.logicalToPhysical(schema)
-    def dataProjection(f: StructField): Column = {
-      val phys = DeltaSchema.physicalName(f)
-      // cast target is nullability-relaxed: the file relation reports
-      // everything nullable, and Cast refuses nullable→non-nullable
-      col(s"`${phys.replace("`", "``")}`").cast(relax(f.dataType)).as(f.name)
-    }
 
     // resolved partition tuple per file (keyed by physical name),
-    // tolerant of legacy `partition.<name>` key shapes — and the
-    // grouping key, so files whose values live under different key
-    // shapes but agree in value still share one scan branch
+    // tolerant of legacy `partition.<name>` key shapes
     val partFields: Seq[StructField] =
       schema.fields.toSeq.filter(f => partCols.contains(f.name))
     def resolvedPv(a: AddAction): Map[String, Option[String]] =
@@ -123,22 +116,18 @@ object DeltaScan {
         phys -> a.partitionValueFor(phys, f.name).flatten
       }.toMap
 
-    // deletion vectors: the scan additionally carries the physical
-    // row index + normalized file key, and deleted (file, index) pairs —
-    // expanded from the compact bitmaps on EXECUTORS — are subtracted
-    // with one anti-join after the union
-    val dvActions = actions.filter(_.hasDeletionVector)
-    val fileKey = "__graft_file"
-    val riKey = "__graft_row_index"
-    // file key from `_metadata.file_path`, NOT input_file_name(): the
-    // metadata column is a deterministic attribute, while a
-    // nondeterministic expression anywhere in the projection would stop
+    // deletion vectors: a DvMask filter on the relation's own
+    // `_metadata.file_path` / `_metadata.row_index` drops deleted rows
+    // inside the scan's stage — no join, no exchange. Both are
+    // deterministic attributes served by the file source (a
+    // nondeterministic input_file_name() anywhere in the plan would stop
     // Catalyst pushing partition predicates through it — silently
-    // disabling planner-side pruning on every DV table
-    def dvCols(scanDf: DataFrame): Seq[Column] =
-      if (dvActions.isEmpty) Nil
-      else Seq(normalizeFileKey(scanDf.col("_metadata.file_path")).as(fileKey),
-        scanDf.col("_metadata.row_index").as(riKey))
+    // disabling planner-side pruning on every DV table)
+    val dvActions = actions.filter(_.hasDeletionVector)
+    def masked(rel: DataFrame): DataFrame =
+      if (dvActions.isEmpty) rel
+      else rel.where(DvMask.live(snap, dvActions,
+        rel.col("_metadata.file_path"), rel.col("_metadata.row_index")))
 
     val df =
       if (actions.isEmpty) emptyTyped(spark, StructType(readFields))
@@ -149,50 +138,32 @@ object DeltaScan {
         // partition pruning re-evaluated by Catalyst per query (cached
         // DataFrames re-prune under new predicates), stats skipping on
         // the pushed data filters inside the index. Deletion-vector
-        // tables ride the same path: `_metadata.row_index` is served by
-        // the file source, so the scan carries the row-index/file-key
-        // pair and the anti-join below subtracts deleted rows — still
-        // ONE scan node. The union/broadcast shapes below remain only
-        // as the wideUnionThreshold=0 escape hatch (and its specs).
-        val index = new DeltaFileIndex(snap, actions)
-        val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-          index, partitionSchema = index.partitionSchema,
-          dataSchema = physReadSchema, bucketSpec = None,
-          fileFormat =
-            new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-          options = Map.empty)(spark)
-        val scan = spark.baseRelationToDataFrame(relation)
-        scan.select(readFields.map { f =>
-          if (partCols.contains(f.name)) {
-            val phys = logToPhys.getOrElse(f.name, f.name)
-            // typed by the index already: alias-only, so partition
-            // predicates stay recognizable to PruneFileSourcePartitions
-            col(s"`${phys.replace("`", "``")}`").as(f.name)
-          } else dataProjection(f)
-        } ++ dvCols(scan): _*)
+        // tables ride the same path: the mask is a filter over that one
+        // scan node. The broadcast shape below remains only as the
+        // wideUnionThreshold=0 escape hatch (and its specs).
+        val rel = fileRelation(snap, actions, physReadSchema)
+        masked(rel).select(logicalColumns(snap, readFields): _*)
       } else {
         // legacy shape (wideUnionThreshold=0 escape hatch): ONE
         // multi-path scan for every file, and partition values delivered
-        // by a broadcast join on the file name — constant-size plan
-        // regardless of partition count
-        val hconf = spark.sessionState.newHadoopConf()
+        // by a broadcast join on the file path — constant-size plan
+        // regardless of partition count. `spark.read.parquet` qualifies
+        // its paths like DeltaFileIndex.filePath, so the scan's
+        // `_metadata.file_path` is the file's fileKey
+        val fileKey = "__graft_file"
+        val key = DeltaFileIndex.fileKey(snap)
         val paths = actions.map(a => resolvePath(base, a.path))
         val scan0 = spark.read.schema(physReadSchema).parquet(paths: _*)
-        val scan = (if (dvActions.isEmpty) scan0
-          else scan0.withColumn(riKey, scan0.col("_metadata.row_index")))
-          .withColumn(fileKey, normalizeFileKey(input_file_name()))
+        val scan = masked(scan0)
+          .withColumn(fileKey, scan0.col("_metadata.file_path"))
 
         val partFields = readFields.filter(f => partCols.contains(f.name))
         val pvSchema = StructType(
           StructField(fileKey, org.apache.spark.sql.types.StringType,
             nullable = false) +: partFields)
         val rows = actions.map { a =>
-          // join key = decoded, scheme/authority-free path — the same
-          // normalization normalizeFileKey applies to input_file_name()
-          val p = new org.apache.hadoop.fs.Path(resolvePath(base, a.path))
-          val uri = p.getFileSystem(hconf).makeQualified(p).toUri.getPath
           val pv = resolvedPv(a)
-          Row.fromSeq(uri +: partFields.map { f =>
+          Row.fromSeq(key(a) +: partFields.map { f =>
             val phys = logToPhys.getOrElse(f.name, f.name)
             pv.getOrElse(phys, None)
               .map(v => toJavaSql(PartitionValues.deserialize(v, f.dataType), f))
@@ -201,43 +172,18 @@ object DeltaScan {
         }
         val pvDf = spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 1), pvSchema)
-        val keep: Seq[Column] =
-          if (dvActions.isEmpty) Nil else Seq(col(fileKey), col(riKey))
         scan.join(broadcast(pvDf), Seq(fileKey))
-          .select(readFields.map { f =>
-            if (partCols.contains(f.name)) col(s"`${f.name.replace("`", "``")}`")
-            else dataProjection(f)
-          } ++ keep: _*)
-      }
-
-    // subtract deleted rows: compact bitmap bytes ship to executors (one
-    // row per DV file), expansion to (file, row index) happens there,
-    // then one anti-join — broadcast while the total deleted-row count is
-    // broadcastable, shuffled beyond that
-    val undeleted =
-      if (dvActions.isEmpty || actions.isEmpty) df
-      else {
-        val hconf = spark.sessionState.newHadoopConf()
-        val dvRows: Seq[(String, Array[Byte])] = dvActions.map { a =>
-          val p = new org.apache.hadoop.fs.Path(resolvePath(base, a.path))
-          val uri = p.getFileSystem(hconf).makeQualified(p).toUri.getPath
-          uri -> DeletionVectors.read(spark, base, a.deletionVector.get)
-        }
-        import spark.implicits._
-        val deleted = spark.createDataset(dvRows)
-          .flatMap { case (f, data) =>
-            DeletionVectors.deserializeData(data).iterator.map(i => (f, i)) }
-          .toDF(fileKey, riKey)
-        val totalDeleted = dvActions.flatMap(_.deletionVector).map(_.cardinality).sum
-        val build = if (totalDeleted <= 5000000L) broadcast(deleted) else deleted
-        df.join(build, Seq(fileKey, riKey), "left_anti")
-          .drop(fileKey, riKey)
+          .select(readFields.zip(logicalColumns(snap, readFields)).map {
+            case (f, _) if partCols.contains(f.name) =>
+              col(s"`${f.name.replace("`", "``")}`")
+            case (_, c) => c
+          }: _*)
       }
 
     val filtered0 =
       if (settings.conditions.nonEmpty)
-        undeleted.where(Cond.compile(settings.conditions, Some(schema)))
-      else undeleted
+        df.where(Cond.compile(settings.conditions, Some(schema)))
+      else df
     val narrowed =
       if (readFields.lengthCompare(projected.size) == 0) filtered0
       else filtered0.select(projected.map(f =>
@@ -261,12 +207,51 @@ object DeltaScan {
       else distinct.limit(n.toInt))
   }
 
+  /** The raw file relation over `actions`: ONE `FileSourceScanExec`
+    * through a [[DeltaFileIndex]] — `dataSchema` columns by physical
+    * name, partition columns typed by the index (physical names), and
+    * the file source's `_metadata` columns.
+    */
+  private[graft] def fileRelation(snap: DeltaSnapshot, actions: Seq[AddAction],
+      dataSchema: StructType): DataFrame = {
+    val index = new DeltaFileIndex(snap, actions)
+    snap.spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+        index, partitionSchema = index.partitionSchema,
+        dataSchema = dataSchema, bucketSpec = None,
+        fileFormat =
+          new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        options = Map.empty)(snap.spark))
+  }
+
+  /** Logical columns `fields` over a [[fileRelation]]: partition
+    * columns are typed by the index already (alias only, so their
+    * predicates stay recognizable to PruneFileSourcePartitions); data
+    * columns get one Cast from the physical column back to the logical
+    * type.
+    */
+  private def logicalColumns(snap: DeltaSnapshot,
+      fields: Seq[StructField]): Seq[Column] = {
+    val logToPhys = DeltaSchema.logicalToPhysical(snap.schema)
+    fields.map { f =>
+      if (snap.partitionColumns.contains(f.name)) {
+        val phys = logToPhys.getOrElse(f.name, f.name)
+        col(s"`${phys.replace("`", "``")}`").as(f.name)
+      } else {
+        val phys = DeltaSchema.physicalName(f)
+        // cast target is nullability-relaxed: the file relation reports
+        // everything nullable, and Cast refuses nullable→non-nullable
+        col(s"`${phys.replace("`", "``")}`").cast(relax(f.dataType)).as(f.name)
+      }
+    }
+  }
+
   /** Logical scan of specific files that ALSO exposes `__graft_file`
-    * (normalized path) and `__graft_row_index` (physical row position) —
-    * DeltaWriter.delete's predicate pass. One multi-path scan branch per
-    * partition group, like the main union path; existing deletion
-    * vectors are NOT applied (delete must see all physical rows to merge
-    * bitmaps).
+    * (the file's `_metadata.file_path`, equal to
+    * [[DeltaFileIndex.fileKey]] of its action) and `__graft_row_index`
+    * (physical row position) — the DML verbs' predicate pass. One
+    * [[fileRelation]]; existing deletion vectors are NOT applied (the
+    * caller masks with [[DvMask]] where dead rows must not count).
     */
   private[graft] def scanWithRowIndex(
       snap: DeltaSnapshot, actions: Seq[AddAction],
@@ -274,36 +259,15 @@ object DeltaScan {
         * a file ⇒ null-filled) — the materialized row-tracking columns.
         */
       extraPhysical: Seq[StructField] = Nil): DataFrame = {
-    val spark = snap.spark
     val schema = snap.schema
-    val partCols = snap.partitionColumns.toSet
-    val logToPhys = DeltaSchema.logicalToPhysical(schema)
-    val dataFields = schema.fields.toSeq.filterNot(f => partCols.contains(f.name))
-    val physReadSchema = StructType(
-      DeltaSchema.physicalize(StructType(dataFields)).fields ++ extraPhysical)
-    val base = snap.deltaPath.stripSuffix("/")
-    val partFields = schema.fields.toSeq.filter(f => partCols.contains(f.name))
-    def pvOf(a: AddAction): Seq[Option[String]] = partFields.map { f =>
-      val phys = logToPhys.getOrElse(f.name, f.name)
-      a.partitionValueFor(phys, f.name).flatten
-    }
-    val branches = actions.groupBy(pvOf).toSeq.map { case (pv, as) =>
-      val scan = spark.read.schema(physReadSchema)
-        .parquet(as.map(a => resolvePath(base, a.path)): _*)
-      val proj = schema.fields.toSeq.map { f =>
-        if (partCols.contains(f.name))
-          PartitionValues.toLiteral(pv(partFields.indexWhere(_.name == f.name)), f)
-        else {
-          val phys = DeltaSchema.physicalName(f)
-          col(s"`${phys.replace("`", "``")}`").cast(relax(f.dataType)).as(f.name)
-        }
-      }
-      scan.select(proj ++
-        extraPhysical.map(f => col(s"`${f.name.replace("`", "``")}`")) ++ Seq(
-        normalizeFileKey(input_file_name()).as("__graft_file"),
-        scan.col("_metadata.row_index").as("__graft_row_index")): _*)
-    }
-    branches.reduce(_.unionByName(_))
+    val dataFields = schema.fields.toSeq
+      .filterNot(f => snap.partitionColumns.contains(f.name))
+    val rel = fileRelation(snap, actions, StructType(
+      DeltaSchema.physicalize(StructType(dataFields)).fields ++ extraPhysical))
+    rel.select(logicalColumns(snap, schema.fields.toSeq) ++
+      extraPhysical.map(f => col(s"`${f.name.replace("`", "``")}`")) ++ Seq(
+      rel.col("_metadata.file_path").as("__graft_file"),
+      rel.col("_metadata.row_index").as("__graft_row_index")): _*)
   }
 
   /** Scan with STABLE ROW IDS (PROTOCOL.md#row-tracking): the logical
@@ -319,7 +283,6 @@ object DeltaScan {
     val spark = snap.spark
     snap.checkProtocolSupported()
     val schema = snap.schema
-    val base = snap.deltaPath.stripSuffix("/")
     val actions = snap.liveFiles
     val idT = org.apache.spark.sql.types.LongType
     if (actions.isEmpty)
@@ -330,43 +293,23 @@ object DeltaScan {
     val extra = (matId.toSeq ++ matVer.toSeq).map(StructField(_, idT))
     def q(n: String) = col(s"`${n.replace("`", "``")}`")
     val scan = scanWithRowIndex(snap, actions, extra)
-    import spark.implicits._
-    val info = actions.map(a => (fileUri(spark, base, a),
-      a.baseRowId, a.defaultRowCommitVersion))
-      .toDF("__graft_file", "__graft_base", "__graft_dver")
-    val joined = scan.join(broadcast(info), Seq("__graft_file"))
     val dvActions = actions.filter(_.hasDeletionVector)
-    val undeleted =
-      if (dvActions.isEmpty) joined
-      else {
-        val dvRows = dvActions.map(a => fileUri(spark, base, a) ->
-          DeletionVectors.read(spark, base, a.deletionVector.get))
-        val deleted = spark.createDataset(dvRows)
-          .flatMap { case (f, data) =>
-            DeletionVectors.deserializeData(data).iterator.map(i => (f, i)) }
-          .toDF("__graft_file", "__graft_row_index")
-        val total = dvActions.flatMap(_.deletionVector).map(_.cardinality).sum
-        val build = if (total <= 5000000L) broadcast(deleted) else deleted
-        joined.join(build,
-          Seq("__graft_file", "__graft_row_index"), "left_anti")
-      }
+    val live =
+      if (dvActions.isEmpty) scan
+      else scan.where(DvMask.live(snap, dvActions,
+        col("__graft_file"), col("__graft_row_index")))
+    import spark.implicits._
+    val key = DeltaFileIndex.fileKey(snap)
+    val info = actions.map(a => (key(a), a.baseRowId, a.defaultRowCommitVersion))
+      .toDF("__graft_file", "__graft_base", "__graft_dver")
+    val joined = live.join(broadcast(info), Seq("__graft_file"))
     import org.apache.spark.sql.functions.coalesce
     val rowId = coalesce((matId.map(q).toSeq :+
       (col("__graft_base") + col("__graft_row_index"))): _*).as("_row_id")
     val rowVer = coalesce((matVer.map(q).toSeq :+
       col("__graft_dver")): _*).as("_row_commit_version")
-    undeleted.select(
+    joined.select(
       schema.fields.toSeq.map(f => q(f.name)) ++ Seq(rowId, rowVer): _*)
-  }
-
-  /** The normalized file key [[scanWithRowIndex]] and the DV anti-join
-    * use for a given action — drive-side twin of normalizeFileKey.
-    */
-  private[graft] def fileUri(
-      spark: SparkSession, base: String, a: AddAction): String = {
-    val p = new org.apache.hadoop.fs.Path(resolvePath(base, a.path))
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-      .makeQualified(p).toUri.getPath
   }
 
   /** Zero live files ⇒ typed empty relation with the full logical schema
@@ -385,21 +328,6 @@ object DeltaScan {
       org.apache.spark.sql.types.MapType(relax(k), relax(v), valueContainsNull = true)
     case other => other
   }
-
-  /** input_file_name() yields a percent-encoded URI (`file:///…`);
-    * reduce it to the decoded path component to match the driver-built
-    * keys (scheme and authority dropped on both sides). `url_decode` is
-    * FORM decoding — a literal '+' in the path (legal in file names and
-    * partition values) would decode to a space and silently drop every
-    * row of that file at the broadcast join; protect it first, exactly
-    * as [[decodePath]] does.
-    */
-  private[delta] def normalizeFileKey(c: Column): Column =
-    org.apache.spark.sql.functions.url_decode(
-      org.apache.spark.sql.functions.regexp_replace(
-        org.apache.spark.sql.functions.regexp_replace(
-          c, "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", ""),
-        "\\+", "%2B"))
 
   /** `createDataFrame` wants java.sql temporal types and scaled decimals. */
   private def toJavaSql(v: Any, f: StructField): Any = v match {

@@ -1418,10 +1418,11 @@ object DeltaWriter extends Logging {
     *
     * Scale shape: metadata pruning first (only files that can match are
     * scanned), then ONE distributed pass evaluates the predicate with
-    * physical row indices, and per-file bitmaps are built on the
-    * EXECUTORS (`mapGroups`) — only the compact serialized bitmaps
-    * (roaring-compressed) reach the driver, which writes the DV files
-    * and the commit. Re-deleting from a file merges with its prior DV.
+    * physical row indices, and each task builds per-file partial
+    * bitmaps — only their compact serialized bytes (roaring-compressed)
+    * reach the driver, which ORs them, writes the DV files and the
+    * commit ([[dvActionLines]]). Re-deleting from a file merges with its
+    * prior DV.
     *
     * Returns the number of newly deleted rows.
     */
@@ -1452,7 +1453,7 @@ object DeltaWriter extends Logging {
     if (cdfEnabled(snap.configuration)) {
       import org.apache.spark.sql.functions.{col, lit}
       def q(n: String) = col(s"`${n.replace("`", "``")}`")
-      val cdc = subtractPriorDv(spark, base, candidates, matchedDf)
+      val cdc = subtractPriorDv(snap, candidates, matchedDf)
         .select(snap.schema.fieldNames.toSeq.map(q): _*)
         .withColumn("_change_type", lit("delete"))
       lines ++= writeCdcFiles(spark, path, snap, cdc)
@@ -1612,7 +1613,7 @@ object DeltaWriter extends Logging {
       if (dvLines.isEmpty) return 0L
       val lines = mutable.ArrayBuffer(dvLines: _*)
       if (cdfEnabled(snap.configuration)) {
-        val cdc = subtractPriorDv(spark, base, candidates, matchedDf)
+        val cdc = subtractPriorDv(snap, candidates, matchedDf)
           .select(schema.fieldNames.toSeq.map(q): _*)
           .withColumn("_change_type", lit("delete"))
         lines ++= writeCdcFiles(spark, path, snap, cdc)
@@ -1813,7 +1814,7 @@ object DeltaWriter extends Logging {
           val cdc = scannedOpt match {
             case None => upserts.withColumn("_change_type", lit("insert"))
             case Some(sc) =>
-              val live = subtractPriorDv(spark, base, candidates, sc)
+              val live = subtractPriorDv(snap, candidates, sc)
               val liveKeys = live.select(keys.map(q): _*).distinct()
               val pre = live
                 .join(src.select(keys.map(q) :+ col("__graft_delete"): _*),
@@ -1892,7 +1893,7 @@ object DeltaWriter extends Logging {
       /** Already-current snapshot to update against, skipping the
         * per-call log replay. */
       priorSnapshot: Option[DeltaSnapshot] = None): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     require(conditions.nonEmpty, "update needs at least one condition")
     require(set.nonEmpty, "update needs at least one assignment")
     val snap = priorSnapshot.getOrElse(DeltaLog.forPath(spark, path))
@@ -1913,9 +1914,9 @@ object DeltaWriter extends Logging {
     def q(n: String) = col(s"`${n.replace("`", "``")}`")
     val matchedRaw = DeltaScan.scanWithRowIndex(snap, candidates)
       .where(Cond.compile(conditions, Some(schema)))
-    // scanWithRowIndex yields all PHYSICAL rows (delete needs that to
-    // merge bitmaps); subtract prior-DV rows before building images
-    val matched = subtractPriorDv(spark, base, candidates, matchedRaw)
+    // scanWithRowIndex yields all PHYSICAL rows; mask prior-DV rows
+    // before building images
+    val matched = subtractPriorDv(snap, candidates, matchedRaw)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     try {
@@ -2081,10 +2082,10 @@ object DeltaWriter extends Logging {
         val cols = schema.fieldNames.toSeq.map(q)
         val wholeDel =
           if (whole.isEmpty) None
-          else Some(subtractPriorDv(spark, base, whole,
+          else Some(subtractPriorDv(snap, whole,
             DeltaScan.scanWithRowIndex(snap, whole)).select(cols: _*))
         val maskDel = restScanOpt.map(m =>
-          subtractPriorDv(spark, base, rest, m).select(cols: _*))
+          subtractPriorDv(snap, rest, m).select(cols: _*))
         val dels = (wholeDel, maskDel) match {
           case (Some(a), Some(b)) => Some(a.unionByName(b))
           case (a, b) => a.orElse(b)
@@ -2531,71 +2532,99 @@ object DeltaWriter extends Logging {
   }
 
   /** Per-file deletion-vector actions for the matched
-    * `(__graft_file, __graft_row_index)` rows: roaring bitmaps built on
-    * the EXECUTORS (`mapGroups`; only the compact serialized bytes reach
-    * the driver), merged with each file's prior DV, plus the protocol
-    * feature upgrade on the table's first DV write. Returns the
-    * remove+add(DV) JSON lines and the newly-deleted row count — empty
-    * when nothing matched. Shared by [[delete]] and [[merge]].
+    * `(__graft_file, __graft_row_index)` rows, built in ONE pass with no
+    * shuffle: each task folds its rows into per-file partial bitmaps
+    * (only their compact serialized bytes leave the task), the driver
+    * ORs the partials of a file split across tasks as each task
+    * finishes, then folds in the prior DV of each matched file — read
+    * for those files only — plus the protocol feature upgrade on the
+    * table's first DV write. Returns the remove+add(DV) JSON lines and
+    * the newly-deleted row count — empty when nothing matched. Shared
+    * by every DV-writing DML verb.
+    *
+    * Size guard: a merge touching millions of files would stress driver
+    * memory, so the partials are counted as they arrive and the
+    * operation fails loudly (with the cure) the moment the distinct
+    * files or their bitmap bytes pass the per-commit limit — the driver
+    * never holds more than the limit plus one task's output — and again
+    * on the final bitmaps, before any DV file or commit is written.
     */
   private def dvActionLines(
       spark: org.apache.spark.sql.SparkSession, base: String,
       snap: DeltaSnapshot, candidates: Seq[AddAction],
       matching: DataFrame): (Seq[String], Long) = {
-    // prior DVs, keyed like __graft_file, captured into the task closure
-    // (bytes are roaring-compressed — small)
-    val priorDv: Map[String, Array[Byte]] = candidates.flatMap(a =>
-      a.deletionVector.map(dv =>
-        DeltaScan.fileUri(spark, base, a) ->
-          DeletionVectors.read(spark, base, dv))).toMap
+    val maxFiles = spark.conf
+      .getOption("spark.graft.dml.maxDvFilesPerCommit")
+      .flatMap(_.toLongOption).getOrElse(500000L)
+    val maxBytes = spark.conf
+      .getOption("spark.graft.dml.maxDvBytesPerCommit")
+      .flatMap(_.toLongOption).getOrElse(2L * 1024 * 1024 * 1024)
+    def overLimit(nFiles: Long, bytes: Long): Option[IllegalStateException] =
+      if (nFiles <= maxFiles && bytes <= maxBytes) None
+      else Some(new IllegalStateException(
+        s"this operation would commit deletion vectors for $nFiles " +
+          s"files ($bytes bitmap bytes), above the per-commit limit " +
+          s"(spark.graft.dml.maxDvFilesPerCommit=$maxFiles, " +
+          s"spark.graft.dml.maxDvBytesPerCommit=$maxBytes) — split it " +
+          "into narrower predicates / per-partition batches, or raise " +
+          "the limit if the driver has the memory for it"))
 
-    import spark.implicits._
-    val grouped = matching
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (f, it) =>
-        val prior = priorDv.get(f).iterator
-          .flatMap(DeletionVectors.deserializeData(_).iterator)
-        val (bytes, card) =
-          DeletionVectors.serializeData(it.map(_._2) ++ prior)
-        (f, bytes, card)
+    val partials = matching.select("__graft_file", "__graft_row_index")
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val perFile = new java.util.HashMap[
+          org.apache.spark.unsafe.types.UTF8String, RowIndexBitmap]
+        var last: org.apache.spark.unsafe.types.UTF8String = null
+        var bits: RowIndexBitmap = null
+        rows.foreach { r =>
+          val f = r.getUTF8String(0)
+          if (last == null || !last.equals(f)) {
+            last = f.clone() // the row buffer behind `f` is reused
+            bits = perFile.computeIfAbsent(last, _ => new RowIndexBitmap)
+          }
+          bits.add(r.getLong(1))
+        }
+        import scala.jdk.CollectionConverters._
+        perFile.asScala.iterator.map { case (k, b) => (k.toString, b.serialize()) }
       }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val perFile: Array[(String, Array[Byte], Long)] =
-      try {
-        // Size guard BEFORE the driver accumulates anything: this commit
-        // path collects one roaring-compressed bitmap per touched file —
-        // bounded and fine for any sane DML, but a merge touching
-        // millions of files would stress driver memory. The check is one
-        // executor-side aggregate over the persisted grouped relation,
-        // so an over-limit operation fails loudly (with the cure) before
-        // a single bitmap reaches the driver.
-        import org.apache.spark.sql.functions.{count, length, lit, sum}
-        val maxFiles = spark.conf
-          .getOption("spark.graft.dml.maxDvFilesPerCommit")
-          .flatMap(_.toLongOption).getOrElse(500000L)
-        val maxBytes = spark.conf
-          .getOption("spark.graft.dml.maxDvBytesPerCommit")
-          .flatMap(_.toLongOption).getOrElse(2L * 1024 * 1024 * 1024)
-        val st = grouped.toDF("f", "dv", "card")
-          .agg(count(lit(1)), sum(length(org.apache.spark.sql.functions.col("dv"))))
-          .collect()(0)
-        val nFiles = st.getLong(0)
-        val totBytes = if (st.isNullAt(1)) 0L else st.getLong(1)
-        if (nFiles > maxFiles || totBytes > maxBytes)
-          throw new IllegalStateException(
-            s"this operation would commit deletion vectors for $nFiles " +
-              s"files ($totBytes bitmap bytes), above the per-commit limit " +
-              s"(spark.graft.dml.maxDvFilesPerCommit=$maxFiles, " +
-              s"spark.graft.dml.maxDvBytesPerCommit=$maxBytes) — split it " +
-              "into narrower predicates / per-partition batches, or raise " +
-              "the limit if the driver has the memory for it")
-        grouped.collect()
-      } finally grouped.unpersist()
-    if (perFile.isEmpty) return (Nil, 0L)
 
-    val byUri: Map[String, AddAction] =
-      candidates.map(a => DeltaScan.fileUri(spark, base, a) -> a).toMap
+    // driver side: OR the partials as each task's output arrives
+    val merged = mutable.HashMap.empty[String, RowIndexBitmap]
+    var received = 0L
+    var tripped: Option[IllegalStateException] = None
+    try spark.sparkContext.runJob(partials,
+      (it: Iterator[(String, Array[Byte])]) => it.toArray,
+      (_: Int, part: Array[(String, Array[Byte])]) => if (tripped.isEmpty) {
+        part.foreach { case (f, data) =>
+          val p = RowIndexBitmap.deserialize(data)
+          merged.get(f) match {
+            case Some(m) => m.or(p)
+            case None => merged(f) = p
+          }
+          received += data.length
+        }
+        tripped = overLimit(merged.size.toLong, received)
+        tripped.foreach { e => merged.clear(); throw e }
+      })
+    catch {
+      // a result handler's exception reaches the caller wrapped
+      case e: org.apache.spark.SparkException
+          if tripped.exists(_ eq e.getCause) => throw e.getCause
+    }
+    if (merged.isEmpty) return (Nil, 0L)
+
+    // fold in each matched file's prior DV; candidates order keeps the
+    // commit's action order stable
+    val key = DeltaFileIndex.fileKey(snap)
+    val perFile: Seq[(AddAction, Array[Byte], Long)] =
+      candidates.flatMap(a => merged.remove(key(a)).map { bits =>
+        a.deletionVector.foreach(dv => bits.or(
+          RowIndexBitmap.deserialize(DeletionVectors.read(spark, base, dv))))
+        (a, bits.serialize(), bits.cardinality)
+      })
+    merged.keysIterator.nextOption().foreach(k =>
+      sys.error(s"delete matched unknown file $k"))
+    overLimit(perFile.size.toLong, perFile.map(_._2.length.toLong).sum)
+      .foreach(e => throw e)
 
     val nf = JsonNodeFactory.instance
     val lines = mutable.ArrayBuffer.empty[String]
@@ -2608,9 +2637,7 @@ object DeltaWriter extends Logging {
       lines += upgradedProtocolJson(snap.protocol, "deletionVectors")
 
     var newlyDeleted = 0L
-    perFile.foreach { case (uri, data, card) =>
-      val action = byUri.getOrElse(uri,
-        sys.error(s"delete matched unknown file $uri"))
+    perFile.foreach { case (action, data, card) =>
       newlyDeleted +=
         card - action.deletionVector.map(_.cardinality).getOrElse(0L)
       val dv = DeletionVectors.descriptorFor(spark, base, data, card)
@@ -2764,30 +2791,17 @@ object DeltaWriter extends Logging {
       cdcFiles.map(rel => cdcLineFor(fs, root, rel))
   }
 
-  /** Subtract rows a prior deletion vector already masked from a
+  /** Drop the rows a prior deletion vector already masked from a
     * [[DeltaScan.scanWithRowIndex]] frame — those physical rows are
     * dead and must feed neither update images nor change data.
     */
-  private def subtractPriorDv(spark: org.apache.spark.sql.SparkSession,
-      base: String, candidates: Seq[AddAction], df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
+  private def subtractPriorDv(snap: DeltaSnapshot,
+      candidates: Seq[AddAction], df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
     val dvCand = candidates.filter(_.hasDeletionVector)
     if (dvCand.isEmpty) df
-    else {
-      import spark.implicits._
-      val dvRows = dvCand.map(a => DeltaScan.fileUri(spark, base, a) ->
-        DeletionVectors.read(spark, base, a.deletionVector.get))
-      val deleted = spark.createDataset(dvRows)
-        .flatMap { case (f, bytes) =>
-          DeletionVectors.deserializeData(bytes).iterator.map(i => (f, i)) }
-        .toDF("__graft_file", "__graft_row_index")
-      val totalDeleted =
-        dvCand.flatMap(_.deletionVector).map(_.cardinality).sum
-      val build =
-        if (totalDeleted <= 5000000L) broadcast(deleted) else deleted
-      df.join(build,
-        Seq("__graft_file", "__graft_row_index"), "left_anti")
-    }
+    else df.where(DvMask.live(snap, dvCand,
+      col("__graft_file"), col("__graft_row_index")))
   }
 
   private[delta] def rowTrackingEnabled(cfg: Map[String, String]): Boolean =
@@ -4023,53 +4037,39 @@ object DeltaWriter extends Logging {
     val lines = mutable.ArrayBuffer.empty[String]
     var nCompacted = 0
 
-    // per-bin preparation: key by (file, row index) once, MATERIALIZE
-    // stable row ids on row-tracked tables (coalesce keeps values
-    // already materialized by an earlier OPTIMIZE), then subtract
-    // DV-deleted rows exactly like the scan does
-    def prepareBin(scan0: DataFrame, bin: Seq[AddAction]): DataFrame = {
+    // per-bin preparation: one DeltaFileIndex relation over the bin,
+    // DV-deleted rows masked exactly like the scan does, and stable row
+    // ids MATERIALIZED on row-tracked tables (coalesce keeps values
+    // already materialized by an earlier OPTIMIZE)
+    def prepareBin(bin: Seq[AddAction]): DataFrame = {
       import org.apache.spark.sql.functions.{broadcast, coalesce, col}
-      val dvActions = bin.filter(_.hasDeletionVector)
-      if (dvActions.isEmpty && matCols.isEmpty) return scan0
       def q(n: String) = col(s"`${n.replace("`", "``")}`")
-      val keyed0 = scan0
-        .withColumn("__graft_ri", scan0.col("_metadata.row_index"))
-        .withColumn("__graft_file", DeltaScan.normalizeFileKey(
-          org.apache.spark.sql.functions.input_file_name()))
-      val keyed = matCols match {
-        case None => keyed0
+      val rel = DeltaScan.fileRelation(snap, bin, physReadSchema)
+      val dvActions = bin.filter(_.hasDeletionVector)
+      val live =
+        if (dvActions.isEmpty) rel
+        else rel.where(DvMask.live(snap, dvActions,
+          rel.col("_metadata.file_path"), rel.col("_metadata.row_index")))
+      val data = physReadSchema.fieldNames.toSeq
+      matCols match {
+        case None => live.select(data.map(q): _*)
         case Some((matId, matVer)) =>
           import spark.implicits._
-          val info = bin.map(a => (DeltaScan.fileUri(spark, base, a),
+          val key = DeltaFileIndex.fileKey(snap)
+          val info = bin.map(a => (key(a),
             a.baseRowId, a.defaultRowCommitVersion))
             .toDF("__graft_file", "__graft_base", "__graft_dver")
-          keyed0.join(broadcast(info), Seq("__graft_file"))
-            .withColumn(matId,
-              coalesce(q(matId), q("__graft_base") + q("__graft_ri")))
-            .withColumn(matVer, coalesce(q(matVer), q("__graft_dver")))
-            .drop("__graft_base", "__graft_dver")
+          live.select(data.map(q) ++ Seq(
+              rel.col("_metadata.file_path").as("__graft_file"),
+              rel.col("_metadata.row_index").as("__graft_ri")): _*)
+            .join(broadcast(info), Seq("__graft_file"))
+            .select(data.map {
+              case `matId` =>
+                coalesce(q(matId), q("__graft_base") + q("__graft_ri")).as(matId)
+              case `matVer` => coalesce(q(matVer), q("__graft_dver")).as(matVer)
+              case n => q(n)
+            }: _*)
       }
-      val sub =
-        if (dvActions.isEmpty) keyed
-        else {
-          val dvRows: Seq[(String, Array[Byte])] = dvActions.map { a =>
-            DeltaScan.fileUri(spark, base, a) ->
-              DeletionVectors.read(spark, base, a.deletionVector.get)
-          }
-          import spark.implicits._
-          val deleted = spark.createDataset(dvRows)
-            .flatMap { case (f, data) =>
-              DeletionVectors.deserializeData(data).iterator.map(i => (f, i)) }
-            .toDF("__graft_file", "__graft_ri")
-          val totalCard =
-            dvActions.flatMap(_.deletionVector).map(_.cardinality).sum
-          val build =
-            if (totalCard <= 5000000L)
-              org.apache.spark.sql.functions.broadcast(deleted)
-            else deleted
-          keyed.join(build, Seq("__graft_file", "__graft_ri"), "left_anti")
-        }
-      sub.drop("__graft_file", "__graft_ri")
     }
 
     // write `df` into the partition directory of `bin.head` (multi-file
@@ -4149,12 +4149,10 @@ object DeltaWriter extends Logging {
         // the recluster's bread and butter)
         if (files.size >= 2 || files.exists(_.hasDeletionVector) ||
             files.exists(_.size > targetFileBytes)) {
-          val paths = files.map(a => DeltaScan.resolvePath(base, a.path))
-          val scan0 = spark.read.schema(physReadSchema).parquet(paths: _*)
           // persisted: the Morton quantization agg, the range
           // partitioner's sampling AND the write would otherwise each
-          // re-read the partition (and re-run the DV anti-join)
-          val df = prepareBin(scan0, files)
+          // re-read the partition (and re-run the DV mask)
+          val df = prepareBin(files)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             val nOut = math.max(1L,
@@ -4177,12 +4175,7 @@ object DeltaWriter extends Logging {
         }
         big.filter(_.hasDeletionVector).foreach(f => bins += mutable.ArrayBuffer(f))
         bins.filter(b => b.size >= 2 || b.exists(_.hasDeletionVector))
-          .foreach { bin =>
-            val scan0 = spark.read.schema(physReadSchema).parquet(
-              bin.map(a => DeltaScan.resolvePath(base, a.path)).toSeq: _*)
-            rewrite(prepareBin(scan0, bin.toSeq).coalesce(1),
-              bin.toSeq, pv)
-          }
+          .foreach(bin => rewrite(prepareBin(bin.toSeq).coalesce(1), bin.toSeq, pv))
       }
     }
     if (lines.isEmpty) return 0

@@ -43,24 +43,20 @@ private[graft] object DvCdf {
     }
 
   /** Read exactly the given (file, row-index) pairs from `snap`'s
-    * files: one distributed scan over the touched files + broadcast
-    * semi-join on the normalized key. Live DVs are NOT applied (the
-    * row set is explicit).
+    * files: one distributed scan over the touched files, filtered by the
+    * inverted [[DvMask]] over the wanted indices (a row passes when its
+    * index is set). Live DVs are NOT applied (the row set is explicit).
     */
   def rowsAt(
       snap: DeltaSnapshot, diffs: Seq[(AddAction, Seq[Long])]): DataFrame = {
-    val spark = snap.spark
-    val base = snap.deltaPath.stripSuffix("/")
-    import org.apache.spark.sql.functions.{broadcast, col, explode}
-    import spark.implicits._
-    val pairs = diffs.map { case (a, idx) =>
-      DeltaScan.fileUri(spark, base, a) -> idx
-    }.toDF("__graft_file", "__graft_ri_list")
-      .select(col("__graft_file"),
-        explode(col("__graft_ri_list")).as("__graft_row_index"))
+    import org.apache.spark.sql.functions.{col, not}
+    val key = DeltaFileIndex.fileKey(snap)
+    val wanted = diffs.map { case (a, idx) =>
+      key(a) -> DeletionVectors.serializeData(idx.iterator)._1
+    }.toMap
     DeltaScan.scanWithRowIndex(snap, diffs.map(_._1))
-      .join(broadcast(pairs), Seq("__graft_file", "__graft_row_index"),
-        "left_semi")
+      .where(not(DvMask(snap.spark, wanted,
+        col("__graft_file"), col("__graft_row_index"))))
       .drop("__graft_file", "__graft_row_index")
   }
 }

@@ -22,7 +22,7 @@ object StreamingBridge {
 
   /** Re-tag `df`'s FILE relations (HadoopFsRelation leaves — the Delta
     * data scan) as streaming and rebuild the frame. Auxiliary leaves
-    * (deletion-vector anti-join build sides, partition-value maps) stay
+    * (row-id maps, partition-value maps) stay
     * batch relations, so the micro-batch planner sees stream-batch
     * joins — which it supports — rather than spurious stream-stream
     * ones.

@@ -48,6 +48,49 @@ class AdviceRegressionSpec extends SparkSuite {
     assert(stored.exists(_.contains("%253A")), stored.mkString(", "))
   }
 
+  /** DV delete, update and OPTIMIZE over a table partitioned by `part`
+    * whose six rows (ids 1..6) spread over three special-character
+    * partition values: both scan shapes must agree with the expected
+    * rows after every step (the DV file key is the scan's own path).
+    */
+  private def dmlInBothShapes(path: String, part: String): Unit = {
+    val all = DeltaLake.scanDelta(spark, path).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[String](part)).toMap
+    def check(want: Map[Long, String]): Unit =
+      Seq(ScanSettings(wideUnionThreshold = 0), ScanSettings()).foreach { s =>
+        val got = DeltaLake.scanDelta(spark, path, s).collect()
+          .map(r => r.getAs[Long]("id") -> r.getAs[String](part)).toSeq
+        assert(got.sorted == want.toSeq.sorted, s"wideUnionThreshold=${s.wideUnionThreshold}")
+      }
+    assert(DeltaWriter.delete(spark, path, Seq(Cond("id", "in", Seq(1L, 2L, 3L)))) == 3L)
+    assert(DeltaLake.deltaMeta(spark, path).liveFiles.exists(_.hasDeletionVector))
+    val afterDelete = all -- Seq(1L, 2L, 3L)
+    check(afterDelete)
+    assert(DeltaWriter.update(spark, path, Seq(Cond("id", ">=", 4L)),
+      Map("id" -> (org.apache.spark.sql.functions.col("id") + 10))) == 3L)
+    val afterUpdate = afterDelete.map { case (k, v) => (k + 10) -> v }
+    check(afterUpdate)
+    DeltaWriter.compact(spark, path)
+    assert(!DeltaLake.deltaMeta(spark, path).liveFiles.exists(_.hasDeletionVector))
+    check(afterUpdate)
+  }
+
+  test("'+' and ' ' partition paths: DV delete, update, OPTIMIZE in both shapes") {
+    val path = tmp()
+    val df = Seq((1L, "c++"), (2L, "a b"), (3L, "x+y z"),
+      (4L, "c++"), (5L, "a b"), (6L, "x+y z")).toDF("id", "lang")
+    DeltaWriter.write(df.coalesce(1), path, partitionBy = Seq("lang"))
+    dmlInBothShapes(path, "lang")
+  }
+
+  test("':' and '%' partition paths: DV delete, update, OPTIMIZE in both shapes") {
+    val path = tmp()
+    val df = Seq((1L, "a:b"), (2L, "50%off"), (3L, "plain"),
+      (4L, "a:b"), (5L, "50%off"), (6L, "plain")).toDF("id", "tag")
+    DeltaWriter.write(df.coalesce(1), path, partitionBy = Seq("tag"))
+    dmlInBothShapes(path, "tag")
+  }
+
   test("timestamp-partitioned table scans back (ntz, hive-escaped dirs)") {
     val path = tmp()
     val ts = Seq(

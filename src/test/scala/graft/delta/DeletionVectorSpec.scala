@@ -529,4 +529,125 @@ class DeletionVectorSpec extends SparkSuite {
     }
     assert(state.toSet == (1L to 10L).toSet, s"streamed state: $state")
   }
+
+  test("a file read by several tasks: DML ORs their partial bitmaps") {
+    val path = tmp()
+    val n = 20000L
+    val confKeys = Seq("parquet.block.size", "spark.sql.files.maxPartitionBytes")
+    val saved = confKeys.map(k => k -> spark.conf.getOption(k))
+    try {
+      // ONE data file with small row groups, so that several splits of
+      // it each own rows
+      spark.conf.set("parquet.block.size", 16L * 1024)
+      DeltaWriter.write((1L to n).toDF("id")
+        .withColumn("payload", sha2(col("id").cast("string"), 256))
+        .coalesce(1), path)
+      val files = DeltaLog.forPath(spark, path).liveFiles
+      assert(files.size == 1)
+      val orig = files.head
+      spark.conf.set("spark.sql.files.maxPartitionBytes", math.max(orig.size / 4, 1L))
+      // physical row index of each id, read without graft
+      val rowIndexOf: Map[Long, Long] =
+        spark.read.parquet(DeltaScan.resolvePath(path, orig.path))
+          .select(col("id"), col("_metadata.row_index")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // precondition: the first and last rows are read by different tasks
+      assert(DeltaLake.scanDelta(spark, path).where(col("id").isin(1L, n))
+        .select(spark_partition_id()).distinct().count() == 2)
+
+      // the head commit has ONE remove/add pair for the file, and its DV
+      // is exactly the union of the rows deleted so far
+      def checkCommit(deleted: Set[Long]): Unit = {
+        val snap = DeltaLog.forPath(spark, path)
+        val log = new org.apache.hadoop.fs.Path(
+          f"$path/_delta_log/${snap.version}%020d.json")
+        val fs = log.getFileSystem(spark.sessionState.newHadoopConf())
+        val src = scala.io.Source.fromInputStream(fs.open(log), "UTF-8")
+        val actions = try src.getLines().map(ActionCodec.mapper.readTree).toList
+          finally src.close()
+        def count(kind: String) =
+          actions.count(_.path(kind).path("path").asText() == orig.path)
+        assert(count("remove") == 1 && count("add") == 1, actions.mkString("\n"))
+        val dv = snap.liveFiles.find(_.path == orig.path).get.deletionVector.get
+        assert(dv.cardinality == deleted.size.toLong)
+        assert(DeletionVectors.deserializeData(DeletionVectors.read(spark, path, dv))
+          .toSet == deleted.map(rowIndexOf))
+      }
+
+      assert(DeltaWriter.delete(spark, path,
+        Seq(Cond("id", "in", Seq(1L, n)))) == 2L)
+      checkCommit(Set(1L, n))
+      assert(DeltaWriter.update(spark, path, Seq(Cond("id", "in", Seq(2L, n - 1))),
+        Map("payload" -> lit("u"))) == 2L)
+      checkCommit(Set(1L, n, 2L, n - 1))
+      val st = DeltaWriter.merge(spark, path,
+        Seq((3L, "m"), (n - 2, "m"), (n + 1, "new")).toDF("id", "payload"), Seq("id"))
+      assert(st.updatedRows == 2L)
+      checkCommit(Set(1L, n, 2L, n - 1, 3L, n - 2))
+
+      val back = DeltaLake.scanDelta(spark, path)
+      assert(back.count() == n - 1)
+      assert(back.where(col("id").isin(1L, n)).count() == 0)
+      assert(back.where(col("payload").isin("u", "m", "new")).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+        Map(2L -> "u", (n - 1) -> "u", 3L -> "m", (n - 2) -> "m", (n + 1) -> "new"))
+    } finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  test("DV masking adds no join or exchange; a one-key DELETE shuffles nothing") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val path = tmp()
+    val df = (1L to 200L).map(i => (i, (i % 4).toString)).toDF("id", "bucket")
+    DeltaWriter.write(df, path, partitionBy = Seq("bucket"))
+    DeltaWriter.delete(spark, path, Seq(Cond("id", "<=", 10L)))
+
+    val scan = DeltaLake.scanDelta(spark, path)
+    assert(scan.collect().map(_.getAs[Long]("id")).sorted.toSeq == (11L to 200L))
+    val plan = scan.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(plan.collect { case s: FileSourceScanExec => s }.size == 1, plan)
+    assert(plan.collect { case e: Exchange => e }.isEmpty, plan)
+    assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, plan)
+    assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[DvMask]))), plan)
+
+    // shuffle bytes written by a one-key DELETE; a sentinel job run after
+    // it marks the point where every earlier event has been delivered
+    val sentinel = "dv-spec-sentinel"
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val tasks = new java.util.concurrent.atomic.AtomicLong
+    val sentinelJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) {
+          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+          tasks.incrementAndGet()
+        }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.job.description") == sentinel)
+          sentinelJob.set(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelJob.get) drained.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(DeltaWriter.delete(spark, path, Seq(Cond("id", "=", 150L))) == 1L)
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(tasks.get > 1) // the delete's own tasks were seen
+    assert(shuffled.get == 0L, s"${shuffled.get} shuffle bytes")
+    assert(DeltaLake.scanDelta(spark, path).count() == 189L)
+  }
 }
