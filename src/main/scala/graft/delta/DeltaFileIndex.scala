@@ -165,8 +165,7 @@ object DeltaFileIndex {
 
   /** Where each of `snap`'s add actions is read from: the resolved path,
     * qualified against the table's filesystem (one lookup per call, not
-    * per file). `spark.read.parquet` qualifies its paths the same way,
-    * so both scan shapes report the same `_metadata.file_path`.
+    * per file).
     */
   private def filePath(snap: DeltaSnapshot): AddAction => Path = {
     val base = snap.deltaPath.stripSuffix("/")

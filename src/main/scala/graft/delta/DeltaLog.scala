@@ -367,7 +367,7 @@ object DeltaLog {
     }
 
   /** Drop every cached snapshot — spec hook (e.g. before asserting
-    * replay behavior) and escape hatch.
+    * replay behavior) and part of [[graft.ops.OpCaches.deepClean]].
     */
   private[graft] def clearSnapshotCache(): Unit =
     cache.synchronized(cache.clear())
@@ -399,8 +399,6 @@ object DeltaLog {
       deltaPath: String,
       version: Option[Long] = None): DeltaSnapshot = {
     if (version.isDefined) return replay(spark, deltaPath, version)
-    if (!spark.conf.get("graft.delta.snapshotCache", "true").toBoolean)
-      return replay(spark, deltaPath, None)
     val key = (spark, deltaPath.stripSuffix("/"))
     def loadAndCache(): DeltaSnapshot = {
       val snap = replay(spark, deltaPath, None)

@@ -26,16 +26,7 @@ final case class ScanSettings(
       * cast over the logical schema.
       */
     timestampType: Option[DataType] = None,
-    timestampNtzType: Option[DataType] = None,
-    /** Scan-shape dispatch. Any value > 0 (the default) takes the
-      * Catalyst-native DeltaFileIndex path — ONE FileSourceScanExec with
-      * planner-side partition pruning, O(1) plan regardless of partition
-      * count, deletion vectors masked by a [[DvMask]] filter over the
-      * same single scan. 0 forces the legacy shape (escape hatch /
-      * its specs): one multi-path scan joined (broadcast) with a
-      * file→partition-values map.
-      */
-    wideUnionThreshold: Int = 64)
+    timestampNtzType: Option[DataType] = None)
 
 /** Compile a Delta snapshot into a Spark `DataFrame` — the engine's core.
   *
@@ -51,13 +42,12 @@ final case class ScanSettings(
   *     struct/array/map casts rename nested fields positionally, preserve
   *     NULL structs (no struct-of-NULLs regression) and absorb type
   *     widening — P1/P3/P5 in a single codegen'd expression;
-  *  3. typed literals for partition columns (P2), constant per file group.
+  *  3. partition values typed per file by the index (P2).
   *
-  * The default plan shape is a single `FileSourceScanExec` through
-  * [[DeltaFileIndex]] regardless of file or partition count (SURVEY §7
-  * risk register: union width) — partition values typed by the index,
-  * deletion vectors masked per file by a [[DvMask]] filter over the same
-  * scan node.
+  * The plan is a single `FileSourceScanExec` through [[DeltaFileIndex]]
+  * regardless of file or partition count (SURVEY §7 risk register:
+  * union width), deletion vectors masked per file by a [[DvMask]] filter
+  * over the same scan node.
   * Pruning (partition values + stats zone maps + limit) happens
   * driver-side AND planner-side (the index re-prunes cached frames).
   */
@@ -102,82 +92,30 @@ object DeltaScan {
     val actions = snap.addActionsFiltered(
       settings.conditions, settings.limit, settings.actionFilter)
 
-    val base = snap.deltaPath.stripSuffix("/")
-
-    val logToPhys = DeltaSchema.logicalToPhysical(schema)
-
-    // resolved partition tuple per file (keyed by physical name),
-    // tolerant of legacy `partition.<name>` key shapes
-    val partFields: Seq[StructField] =
-      schema.fields.toSeq.filter(f => partCols.contains(f.name))
-    def resolvedPv(a: AddAction): Map[String, Option[String]] =
-      partFields.map { f =>
-        val phys = logToPhys.getOrElse(f.name, f.name)
-        phys -> a.partitionValueFor(phys, f.name).flatten
-      }.toMap
-
-    // deletion vectors: a DvMask filter on the relation's own
+    // one FileSourceScanExec through a DeltaFileIndex whatever the
+    // partition count: the index hands the planner the file list, typed
+    // partition values and log-derived size, Catalyst re-evaluates
+    // partition pruning per query (cached DataFrames re-prune under new
+    // predicates), and stats skipping runs on the pushed data filters
+    // inside the index.
+    //
+    // Deletion vectors: a DvMask filter on the relation's own
     // `_metadata.file_path` / `_metadata.row_index` drops deleted rows
     // inside the scan's stage — no join, no exchange. Both are
     // deterministic attributes served by the file source (a
     // nondeterministic input_file_name() anywhere in the plan would stop
     // Catalyst pushing partition predicates through it — silently
     // disabling planner-side pruning on every DV table)
-    val dvActions = actions.filter(_.hasDeletionVector)
-    def masked(rel: DataFrame): DataFrame =
-      if (dvActions.isEmpty) rel
-      else rel.where(DvMask.live(snap, dvActions,
-        rel.col("_metadata.file_path"), rel.col("_metadata.row_index")))
-
     val df =
       if (actions.isEmpty) emptyTyped(spark, StructType(readFields))
-      else if (settings.wideUnionThreshold > 0) {
-        // Catalyst-native path (the default): a DeltaFileIndex hands the
-        // planner the file list, typed partition values, and log-derived
-        // size — ONE FileSourceScanExec whatever the partition count,
-        // partition pruning re-evaluated by Catalyst per query (cached
-        // DataFrames re-prune under new predicates), stats skipping on
-        // the pushed data filters inside the index. Deletion-vector
-        // tables ride the same path: the mask is a filter over that one
-        // scan node. The broadcast shape below remains only as the
-        // wideUnionThreshold=0 escape hatch (and its specs).
+      else {
         val rel = fileRelation(snap, actions, physReadSchema)
-        masked(rel).select(logicalColumns(snap, readFields): _*)
-      } else {
-        // legacy shape (wideUnionThreshold=0 escape hatch): ONE
-        // multi-path scan for every file, and partition values delivered
-        // by a broadcast join on the file path — constant-size plan
-        // regardless of partition count. `spark.read.parquet` qualifies
-        // its paths like DeltaFileIndex.filePath, so the scan's
-        // `_metadata.file_path` is the file's fileKey
-        val fileKey = "__graft_file"
-        val key = DeltaFileIndex.fileKey(snap)
-        val paths = actions.map(a => resolvePath(base, a.path))
-        val scan0 = spark.read.schema(physReadSchema).parquet(paths: _*)
-        val scan = masked(scan0)
-          .withColumn(fileKey, scan0.col("_metadata.file_path"))
-
-        val partFields = readFields.filter(f => partCols.contains(f.name))
-        val pvSchema = StructType(
-          StructField(fileKey, org.apache.spark.sql.types.StringType,
-            nullable = false) +: partFields)
-        val rows = actions.map { a =>
-          val pv = resolvedPv(a)
-          Row.fromSeq(key(a) +: partFields.map { f =>
-            val phys = logToPhys.getOrElse(f.name, f.name)
-            pv.getOrElse(phys, None)
-              .map(v => toJavaSql(PartitionValues.deserialize(v, f.dataType), f))
-              .orNull
-          })
-        }
-        val pvDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), pvSchema)
-        scan.join(broadcast(pvDf), Seq(fileKey))
-          .select(readFields.zip(logicalColumns(snap, readFields)).map {
-            case (f, _) if partCols.contains(f.name) =>
-              col(s"`${f.name.replace("`", "``")}`")
-            case (_, c) => c
-          }: _*)
+        val dvActions = actions.filter(_.hasDeletionVector)
+        val live =
+          if (dvActions.isEmpty) rel
+          else rel.where(DvMask.live(snap, dvActions,
+            rel.col("_metadata.file_path"), rel.col("_metadata.row_index")))
+        live.select(logicalColumns(snap, readFields): _*)
       }
 
     val filtered0 =
@@ -326,21 +264,6 @@ object DeltaScan {
       org.apache.spark.sql.types.ArrayType(relax(et), containsNull = true)
     case org.apache.spark.sql.types.MapType(k, v, _) =>
       org.apache.spark.sql.types.MapType(relax(k), relax(v), valueContainsNull = true)
-    case other => other
-  }
-
-  /** `createDataFrame` wants java.sql temporal types and scaled decimals. */
-  private def toJavaSql(v: Any, f: StructField): Any = v match {
-    case d: java.time.LocalDate => java.sql.Date.valueOf(d)
-    case i: java.time.Instant => java.sql.Timestamp.from(i)
-    case l: java.time.LocalDateTime =>
-      if (f.dataType == org.apache.spark.sql.types.TimestampNTZType) l
-      else java.sql.Timestamp.valueOf(l)
-    case b: java.math.BigDecimal => f.dataType match {
-      case dt: org.apache.spark.sql.types.DecimalType =>
-        b.setScale(dt.scale, java.math.RoundingMode.UNNECESSARY)
-      case _ => b
-    }
     case other => other
   }
 

@@ -28,9 +28,9 @@ import scala.jdk.CollectionConverters._
   * shrink the emitted file list.
   *
   * Scale note: SQL text grows with live-file count (as does the
-  * reference's). The DataFrame path ([[DeltaScan]]) with its O(1)-size
-  * wide-partition plan is the 100 TB surface; this exists for users
-  * porting reference code that embeds generated SQL.
+  * reference's). The DataFrame path ([[DeltaScan]]), one scan node at
+  * any file or partition count, is the 100 TB surface; this exists for
+  * users porting reference code that embeds generated SQL.
   */
 object DeltaSql {
 

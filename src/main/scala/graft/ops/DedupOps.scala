@@ -838,8 +838,7 @@ object DedupOps {
     * 0.96 s (5.1x) — amplification is what makes the bench SEE that.
     * r5: capped from 5x (round-4 note — the amplified md5 kernel alone
     * was 8.4 s of a 28 s cold driver total; 3x keeps the flavor ratio
-    * visible without one microbench dominating cold totals). Bench
-    * reports these under "kernels", outside the headline totals.
+    * visible without one microbench dominating cold totals).
     */
   private def sigThroughput(
       s: SparkSession, dir: String, fastHash: Boolean): DataFrame =

@@ -42,7 +42,7 @@ object DeltaQueries {
     * a missing marker (crash mid-setup) also rebuilds from scratch.
     *
     * SINGLE-WRITER ASSUMPTION: the marker protocol is not a mutex. The
-    * harness runs Verify / Bench / sbt test sequentially, never two
+    * harness runs Verify / perfbench / sbt test sequentially, never two
     * JVMs staging the same sfDir concurrently — if that ever changes,
     * the delete+setup below needs a lock file (or stage-into-temp +
     * atomic rename), because two JVMs could both see a stale marker
@@ -84,23 +84,6 @@ object DeltaQueries {
     }
     path
   }
-
-  /** r15 snapcache-kernel staging: a table of `commits` tiny appends
-    * (checkpointInterval at the Delta default of 10), so an uncached
-    * open replays a checkpoint parquet plus up to 9 JSON commits while
-    * a cache hit pays two file-status probes. The s6 store the r14
-    * probe pointed at has ~3 commits, where the two series read equal
-    * (BENCH_r14: off 1.21 < on 1.31 — measuring nothing).
-    */
-  private[graft] def stageManyCommitTable(s: SparkSession, dir: String,
-      commits: Int = 100): String =
-    stagedOnce(s, dir, "snapcache_manycommit", "nation") { path =>
-      import s.implicits._
-      (0 until commits).foreach { i =>
-        DeltaWriter.write(Seq((i.toLong, s"c$i")).toDF("id", "v"), path,
-          mode = if (i == 0) "overwrite" else "append")
-      }
-    }
 
   private def ensureLineitemDelta(s: SparkSession, dir: String): String =
     stagedOnce(s, dir, "lineitem_delta", "lineitem") { path =>

@@ -159,11 +159,11 @@ private[graft] object OpCaches {
     * is garbage-collected), and memory-sink tables from streaming
     * drains live outside the registry entirely. A multi-pass session
     * that only calls [[clear]] accumulates those until late passes
-    * measure storage eviction instead of the operators — the bench and
-    * the sf1 rehearsal call this at pass boundaries so every pass
-    * starts from the same storage state. The System.gc() nudge lets
-    * the ContextCleaner's weak references fire NOW instead of during
-    * the next timed query.
+    * measure storage eviction instead of the operators — perfbench's
+    * curate_pipeline and the sf1 rehearsal call this at pass boundaries
+    * so every pass starts from the same storage state. The System.gc()
+    * nudge lets the ContextCleaner's weak references fire NOW instead
+    * of during the next timed query.
     */
   def deepClean(spark: SparkSession): Unit = {
     clear()

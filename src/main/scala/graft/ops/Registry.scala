@@ -6,10 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * implementation plus (when SQL-expressible) the DuckDB oracle that must
   * hash-match it. Column names are aligned on both sides — the driver
   * sorts columns by name before hashing. `kernel = true` marks a
-  * deliberately-amplified microbenchmark: Bench reports it under the
-  * separate `kernels` section instead of the headline totals (a typed
-  * flag, not a naming convention, so new kernels can't silently land in
-  * the totals).
+  * deliberately-amplified microbenchmark: ScaleRehearsal runs it in its
+  * own group and marks its ratio `[k]` instead of counting it as an
+  * operator (a typed flag, not a naming convention, so new kernels
+  * can't silently pass for operators).
   */
 final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,

@@ -38,6 +38,10 @@ import org.apache.spark.sql.SparkSession
   * Kernel-flagged entries (d7: deliberately-amplified hash
   * microbenchmarks) are included but marked `[k]` — their ratios
   * measure the amplified kernel, not an operator.
+  *
+  * "The bench" and "Bench" below mean the round-17 timing main this
+  * rehearsal mirrored; it has been deleted, and `perfbench/run.py` is
+  * the benchmark now. The notes describe that protocol as it was.
   */
 object ScaleRehearsal {
 

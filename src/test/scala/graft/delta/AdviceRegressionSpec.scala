@@ -21,13 +21,11 @@ class AdviceRegressionSpec extends SparkSuite {
     val path = tmp()
     val df = Seq((1L, "c++"), (2L, "a b"), (3L, "x+y z")).toDF("id", "lang")
     DeltaWriter.write(df, path, partitionBy = Seq("lang"))
-    // wideUnionThreshold=0 forces the broadcast-join path whose file key
-    // used form-decoding: '+' became a space and the rows vanished
-    val wide = DeltaLake.scanDelta(spark, path, ScanSettings(wideUnionThreshold = 0))
-    val union = DeltaLake.scanDelta(spark, path)
-    assert(wide.count() == 3)
-    assert(wide.collect().map(_.toString).sorted.toSeq ==
-      union.collect().map(_.toString).sorted.toSeq)
+    // a file key built by form-decoding turned '+' into a space and
+    // the rows vanished
+    val back = DeltaLake.scanDelta(spark, path).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[String]("lang")).sorted.toSeq
+    assert(back == Seq(1L -> "c++", 2L -> "a b", 3L -> "x+y z"))
   }
 
   test("hive-escaped partition dirs (':' '%') round-trip through add.path") {
@@ -38,9 +36,6 @@ class AdviceRegressionSpec extends SparkSuite {
     DeltaWriter.write(df, path, partitionBy = Seq("tag"))
     val back = DeltaLake.scanDelta(spark, path).orderBy("id").collect()
     assert(back.map(_.getAs[String]("tag")).toSeq == Seq("a:b", "50%off", "plain"))
-    // and through the wide path too (same decode on the executor side)
-    val wide = DeltaLake.scanDelta(spark, path, ScanSettings(wideUnionThreshold = 0))
-    assert(wide.count() == 3)
     // the stored add.path is percent-encoded (no raw '%3A' that would
     // percent-decode to a different on-disk name)
     val snap = DeltaLake.deltaMeta(spark, path)
@@ -50,18 +45,17 @@ class AdviceRegressionSpec extends SparkSuite {
 
   /** DV delete, update and OPTIMIZE over a table partitioned by `part`
     * whose six rows (ids 1..6) spread over three special-character
-    * partition values: both scan shapes must agree with the expected
-    * rows after every step (the DV file key is the scan's own path).
+    * partition values: the scan must return the expected rows after
+    * every step (the DV file key is the scan's own path).
     */
-  private def dmlInBothShapes(path: String, part: String): Unit = {
+  private def dmlThroughScan(path: String, part: String): Unit = {
     val all = DeltaLake.scanDelta(spark, path).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String](part)).toMap
-    def check(want: Map[Long, String]): Unit =
-      Seq(ScanSettings(wideUnionThreshold = 0), ScanSettings()).foreach { s =>
-        val got = DeltaLake.scanDelta(spark, path, s).collect()
-          .map(r => r.getAs[Long]("id") -> r.getAs[String](part)).toSeq
-        assert(got.sorted == want.toSeq.sorted, s"wideUnionThreshold=${s.wideUnionThreshold}")
-      }
+    def check(want: Map[Long, String]): Unit = {
+      val got = DeltaLake.scanDelta(spark, path).collect()
+        .map(r => r.getAs[Long]("id") -> r.getAs[String](part)).toSeq
+      assert(got.sorted == want.toSeq.sorted)
+    }
     assert(DeltaWriter.delete(spark, path, Seq(Cond("id", "in", Seq(1L, 2L, 3L)))) == 3L)
     assert(DeltaLake.deltaMeta(spark, path).liveFiles.exists(_.hasDeletionVector))
     val afterDelete = all -- Seq(1L, 2L, 3L)
@@ -75,20 +69,20 @@ class AdviceRegressionSpec extends SparkSuite {
     check(afterUpdate)
   }
 
-  test("'+' and ' ' partition paths: DV delete, update, OPTIMIZE in both shapes") {
+  test("'+' and ' ' partition paths: DV delete, update, OPTIMIZE") {
     val path = tmp()
     val df = Seq((1L, "c++"), (2L, "a b"), (3L, "x+y z"),
       (4L, "c++"), (5L, "a b"), (6L, "x+y z")).toDF("id", "lang")
     DeltaWriter.write(df.coalesce(1), path, partitionBy = Seq("lang"))
-    dmlInBothShapes(path, "lang")
+    dmlThroughScan(path, "lang")
   }
 
-  test("':' and '%' partition paths: DV delete, update, OPTIMIZE in both shapes") {
+  test("':' and '%' partition paths: DV delete, update, OPTIMIZE") {
     val path = tmp()
     val df = Seq((1L, "a:b"), (2L, "50%off"), (3L, "plain"),
       (4L, "a:b"), (5L, "50%off"), (6L, "plain")).toDF("id", "tag")
     DeltaWriter.write(df.coalesce(1), path, partitionBy = Seq("tag"))
-    dmlInBothShapes(path, "tag")
+    dmlThroughScan(path, "tag")
   }
 
   test("timestamp-partitioned table scans back (ntz, hive-escaped dirs)") {

@@ -94,11 +94,8 @@ class DeletionVectorSpec extends SparkSuite {
     val df = (1L to 60L).map(i => (i, (i % 6).toString)).toDF("id", "b")
     DeltaWriter.write(df, path, partitionBy = Seq("b"))
     DeltaWriter.delete(spark, path, Seq(Cond("id", "<=", 12L)))
-    val wide = DeltaLake.scanDelta(spark, path, ScanSettings(wideUnionThreshold = 0))
-    val union = DeltaLake.scanDelta(spark, path)
-    assert(wide.count() == 48 && union.count() == 48)
-    assert(wide.collect().map(_.getAs[Long]("id")).sorted.toSeq ==
-      union.collect().map(_.getAs[Long]("id")).sorted.toSeq)
+    val scan = DeltaLake.scanDelta(spark, path)
+    assert(scan.collect().map(_.getAs[Long]("id")).sorted.toSeq == (13L to 60L))
   }
 
   test("inline ('i') deletion vectors read back") {

@@ -201,9 +201,6 @@ class DeltaSqlSpec extends SparkSuite {
     val rows = DeltaLake.scanDelta(spark, root).orderBy("id").collect()
     assert(rows.length == 2)
     assert(rows.forall(_.getAs[String]("p") == "A"))
-    // and through the wide path (same lookup on the broadcast side)
-    val wide = DeltaLake.scanDelta(spark, root, ScanSettings(wideUnionThreshold = 0))
-    assert(wide.collect().forall(_.getAs[String]("p") == "A"))
   }
 
   test("legacy partition values survive a checkpoint rewrite") {

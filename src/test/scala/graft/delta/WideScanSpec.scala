@@ -4,15 +4,12 @@ import org.apache.spark.sql.functions._
 
 import graft.{DeltaLake, SparkSuite}
 
-/** The wide-partition scan path (single multi-path scan + broadcast
-  * file→partition-values join) must agree exactly with the union path.
+/** The scan of a partitioned table is one parquet scan node whatever
+  * the partition count, and types every partition value back in.
   */
 class WideScanSpec extends SparkSuite {
 
   import spark.implicits._
-
-  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
 
   test("wide path == union path on a partitioned written table") {
     val path = java.nio.file.Files.createTempDirectory("graft_wide").toString + "/t"
@@ -20,33 +17,29 @@ class WideScanSpec extends SparkSuite {
       .toDF("id", "payload", "bucket")
     DeltaWriter.write(df, path, partitionBy = Seq("bucket"))
 
-    val viaUnion = DeltaLake.scanDelta(spark, path)
-    val viaJoin = DeltaLake.scanDelta(spark, path,
-      ScanSettings(wideUnionThreshold = 0))
-    assert(viaJoin.schema.fieldNames.toSeq == viaUnion.schema.fieldNames.toSeq)
-    assert(rows(viaJoin) == rows(viaUnion))
-    assert(rows(viaJoin).size == 50)
+    val scan = DeltaLake.scanDelta(spark, path)
+    assert(scan.schema.fieldNames.toSeq == Seq("id", "payload", "bucket"))
+    assert(scan.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      .sortBy(_._1).toSeq ==
+      (1 to 50).map(i => (i.toLong, s"v$i", (i % 10).toString)))
 
-    // plan shape: exactly one parquet scan node on the join path (AQE
-    // toString repeats the plan — look at the final section only)
-    val planStr = viaJoin.queryExecution.executedPlan.toString
+    // plan shape: exactly one parquet scan node (AQE toString repeats
+    // the plan — look at the final section only)
+    val planStr = scan.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert("Scan parquet".r.findAllIn(planStr).size == 1, planStr)
 
     // filters still work (on both partition and data columns)
     val filtered = DeltaLake.scanDelta(spark, path,
-      ScanSettings(wideUnionThreshold = 0,
-        conditions = Seq(Cond("bucket", "=", "3"), Cond("id", "<=", 23))))
+      ScanSettings(conditions = Seq(Cond("bucket", "=", "3"), Cond("id", "<=", 23))))
     assert(filtered.collect().map(_.getAs[Long]("id")).sorted.toSeq == Seq(3L, 13L, 23L))
   }
 
   test("wide path handles column mapping + null partitions (faker2)") {
-    val viaUnion = DeltaLake.scanDelta(spark, fixture("faker2"))
-    val viaJoin = DeltaLake.scanDelta(spark, fixture("faker2"),
-      ScanSettings(wideUnionThreshold = 0))
-    assert(rows(viaJoin) == rows(viaUnion))
+    val scan = DeltaLake.scanDelta(spark, fixture("faker2"))
+    assert(scan.count() == 6)
     // the null-partition row survives with a NULL partition value
-    val nullPart = viaJoin.where(col("`Company Very Short`").isNull)
+    val nullPart = scan.where(col("`Company Very Short`").isNull)
     assert(nullPart.count() == 1)
   }
 }
